@@ -258,15 +258,6 @@ def main() -> None:
     if errors:
         out["errors"] = errors
 
-    # Streaming surface micro-bench (r8): rows/s through the 3-subscriber
-    # route() dispatch + foreachBatch latency distribution — the batch
-    # suite can't see this path. Failure must not kill the batch record.
-    try:
-        from ex_hivent_spark.streaming.bench import run_streaming_bench
-
-        out["streaming"] = run_streaming_bench(spark)
-    except Exception as ex:  # noqa: BLE001
-        out["streaming"] = {"error": str(ex).splitlines()[0][:200]}
     # Robustness against tail-only output capture: the driver records
     # only the LAST 2000 characters of stdout (BENCH_r05.json's tail
     # field), and with 100 headline queries the full one-line JSON is

@@ -3,8 +3,10 @@ quarantine, on Structured Streaming.
 
 Reference lifecycle (lib/hivent/consumer.ex):
 - subscribe: join channel ``event:<topic>`` with ``partition_count``
-  (consumer.ex:105-107) → here: ``readStream`` + ``filter(name == topic)``
-  + ``repartition(partition_count, meta.key)``.
+  (consumer.ex:105-107) → here: ``readStream`` + a topic match per
+  subscription. Rows already carry the emitter's ``partition_id``
+  (``pmod(xxhash64(meta.key), n)``), so the partition claim is read from
+  the row, not re-derived with a shuffle.
 - process: user ``process/1`` callback per event (consumer.ex:25, 68-81);
   ``:ok`` → done, ``{:error, reason}`` → quarantine the ``{event, queue}``
   pair (consumer.ex:98-100).
@@ -42,15 +44,49 @@ INGRESS_SCHEMA = T.StructType(
     [*EVENT_SCHEMA.fields, T.StructField("partition_id", T.IntegerType())]
 )
 
+# route()'s trigger interval. With the default trigger an idle query
+# re-lists the ingress directory every 10 ms: an idle 3-subscription
+# route() used 0.2-0.4 CPU-s per second on a 4-vCPU host, and about
+# 0.03 CPU-s/s at 250 ms, for at most 250 ms of added latency.
+ROUTE_TRIGGER = "250 milliseconds"
+
+# Column naming the subscription a tagged row belongs to (its index).
+_SUB = "_sub"
+
 ProcessFn = Callable[[Mapping[str, Any]], "None | str"]
 
 
-def _error_column(process: "Column | ProcessFn") -> Column:
-    if isinstance(process, Column):
-        return process
+@dataclass
+class Subscription:
+    """One subscriber's slice of a multiplexed stream: the topic
+    filter + process callback + its own sinks (the per-subscription
+    {matcher, mapper, callback} triple of the reference's channel
+    client, lib/hivent/phoenix/channel_client.ex:363-390).
+
+    ``partition_count`` is kept for the reference's subscribe signature;
+    it no longer shuffles — the queue name reads the ``partition_id``
+    the emitter stamped from the same key hash."""
+
+    service: str
+    topic: str
+    process: "Column | ProcessFn"
+    processed_dir: str
+    quarantine_dir: str
+    partition_count: int = DEFAULT_PARTITION_COUNT
+
+
+def _callable_column(callables: Mapping[int, ProcessFn]) -> Column:
+    """ONE UDF for every Python-callable subscription, dispatching on the
+    row's subscription tag. PySpark evaluates a Python UDF on every row
+    even inside a CASE branch, so a UDF per subscription would hand each
+    callable the other topics' events; dispatching here means each
+    ``process`` sees only its own rows."""
 
     @F.udf("string")
-    def _proc_udf(name, payload, version, uuid):
+    def _proc_udf(sub, name, payload, version, uuid):
+        process = callables.get(sub)
+        if process is None:
+            return None
         try:
             result = process(
                 {"name": name, "payload": payload, "version": version, "uuid": uuid}
@@ -59,96 +95,77 @@ def _error_column(process: "Column | ProcessFn") -> Column:
         except Exception as ex:  # the reference quarantines on {:error, _}
             return str(ex)
 
-    return _proc_udf(
-        F.col("name"), F.col("payload"), F.col("meta.version"), F.col("meta.uuid")
+    return _proc_udf(_SUB, "name", "payload", "meta.version", "meta.uuid")
+
+
+def _error_column(subscriptions: list[Subscription]) -> Column:
+    """Error-message-or-null of a tagged row: its subscription's process
+    expression, or the shared callable UDF's result."""
+    callables = {
+        i: s.process
+        for i, s in enumerate(subscriptions)
+        if not isinstance(s.process, Column)
+    }
+    udf_error = _callable_column(callables) if callables else None
+    error = None
+    for i, sub in enumerate(subscriptions):
+        branch = udf_error if i in callables else sub.process
+        cond = F.col(_SUB) == F.lit(i)
+        error = F.when(cond, branch) if error is None else error.when(cond, branch)
+    return error
+
+
+def _batch_handler(
+    subscriptions: list[Subscription],
+) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch body: one pass over the micro-batch for every
+    subscription.
+
+    Each row is exploded to the subscriptions whose topic it matches
+    (unclaimed topics drop out), ``error`` and ``queue`` are computed
+    once over that tagged frame, and the frame is materialized ONCE
+    (localCheckpoint) so a non-deterministic or stateful process
+    callback cannot see a row twice across the writes. Each
+    subscription's ok and quarantine sinks are then written from it,
+    serially in the foreachBatch thread — so every job runs under the
+    query's job group and a ``stop()`` reaches it. Writes target
+    ``batch_id``-keyed directories with overwrite, including empty
+    outcomes: a replayed batch overwrites the same directories instead
+    of appending duplicates, which upgrades the source's at-least-once
+    delivery to effectively-once sink contents, per subscription."""
+    tags = F.array(
+        *[
+            F.when(F.col("name") == F.lit(s.topic), F.lit(i))
+            for i, s in enumerate(subscriptions)
+        ]
     )
+    services = F.array(*[F.lit(s.service) for s in subscriptions])
+    queue = F.concat_ws(
+        ":",
+        F.element_at(services, F.col(_SUB) + 1),
+        F.col("partition_id").cast("string"),
+    )
+    error = _error_column(subscriptions)
 
-
-@dataclass
-class Consumer:
-    """One consumer group (``service``) over one topic."""
-
-    spark: SparkSession
-    source_dir: str
-    service: str
-    topic: str
-    process: "Column | ProcessFn"
-    checkpoint_dir: str
-    processed_dir: str
-    quarantine_dir: str
-    partition_count: int = DEFAULT_PARTITION_COUNT
-
-    def _stream(self) -> DataFrame:
-        raw = (
-            self.spark.readStream.schema(INGRESS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(self.source_dir)
+    def handle(batch: DataFrame, batch_id: int) -> None:
+        evaluated = (
+            batch.withColumn(_SUB, F.explode(F.filter(tags, lambda t: t.isNotNull())))
+            .withColumn("error", error)
+            .withColumn("queue", queue)
+            .localCheckpoint(eager=True)
         )
-        return raw.filter(F.col("name") == F.lit(self.topic)).repartition(
-            self.partition_count, F.col("meta.key")
-        )
+        for i, sub in enumerate(subscriptions):
+            mine = evaluated.filter(F.col(_SUB) == F.lit(i)).drop(_SUB)
+            mine.filter(F.col("error").isNull()).drop("error").write.mode(
+                "overwrite"
+            ).parquet(f"{sub.processed_dir}/batch_id={batch_id}")
+            mine.filter(F.col("error").isNotNull()).withColumn(
+                "quarantined_at", F.current_timestamp()
+            ).write.mode("overwrite").parquet(
+                f"{sub.quarantine_dir}/batch_id={batch_id}"
+            )
 
-    def _handle_batch(self, batch: DataFrame, batch_id: int) -> None:
-        evaluated = batch.withColumn("error", _error_column(self.process)).withColumn(
-            "queue",
-            F.concat_ws(":", F.lit(self.service), F.col("partition_id").cast("string")),
-        )
-        # Single evaluation per row, two filtered writes (the reference's
-        # ok/quarantine split, consumer.ex:71-81). localCheckpoint
-        # materializes the batch once so a non-deterministic/stateful
-        # process callback cannot see a row twice across the two writes
-        # (costs one in-memory copy of the micro-batch — bounded by
-        # maxFilesPerTrigger).
-        evaluated = evaluated.localCheckpoint(eager=True)
-        ok = evaluated.filter(F.col("error").isNull()).drop("error")
-        failed = evaluated.filter(F.col("error").isNotNull()).withColumn(
-            "quarantined_at", F.current_timestamp()
-        )
-        # Idempotent replay: each write targets a batch_id-keyed partition
-        # directory with overwrite. If the stream crashes between the two
-        # writes (or before the checkpoint commits), the replayed batch
-        # overwrites the same directories instead of appending duplicates
-        # — this is what upgrades the source's at-least-once delivery to
-        # effectively-once *sink contents*.
-        ok.write.mode("overwrite").parquet(
-            f"{self.processed_dir}/batch_id={batch_id}"
-        )
-        failed.write.mode("overwrite").parquet(
-            f"{self.quarantine_dir}/batch_id={batch_id}"
-        )
-
-    def start(self) -> StreamingQuery:
-        return (
-            self._stream()
-            .writeStream.foreachBatch(self._handle_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .start()
-        )
-
-    def run_available(self) -> None:
-        """Process everything currently in the source, then stop —
-        the batch-ish drain used by tests and catch-up jobs."""
-        q = self.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination(30)
-
-
-@dataclass
-class Subscription:
-    """One subscriber's slice of a multiplexed stream: the topic
-    filter + process callback + its own sinks (the per-subscription
-    {matcher, mapper, callback} triple of the reference's channel
-    client, /root/reference/lib/hivent/phoenix/channel_client.ex:363-390)."""
-
-    service: str
-    topic: str
-    process: "Column | ProcessFn"
-    processed_dir: str
-    quarantine_dir: str
-    partition_count: int = DEFAULT_PARTITION_COUNT
+    return handle
 
 
 def route(
@@ -160,80 +177,73 @@ def route(
     """One-pass multi-subscriber dispatch: ONE readStream feeds every
     subscription through a single foreachBatch — the reference's single
     socket fanning out to N subscribers (channel_client.ex:363-390,
-    each with its own matcher + callback), where N separate Consumers
-    would re-read (and at 100 TB, re-shuffle) the source N times.
+    each with its own matcher + callback), where N separate queries
+    would re-read the source N times.
 
-    Per micro-batch: the batch is materialized ONCE (localCheckpoint —
-    same single-evaluation guarantee as Consumer._handle_batch), then
-    each subscription applies its topic filter + process expression and
-    writes its own ok/quarantine sinks under batch_id-keyed directories
-    (idempotent overwrite on replay → effectively-once per sink, with
-    per-topic quarantine isolation). All subscriptions advance on the
-    shared checkpoint: one source offset log, N logical consumers.
-
-    r16 OPTIMIZATION (guide §2.6 — overlap independent jobs): the N
-    subscription slices are INDEPENDENT jobs over the one materialized
-    batch (disjoint topic filters, disjoint sink directories), yet the
-    serial loop left the cluster idle through each slice's write tail.
-    They now run from a small driver thread pool, so one slice's
-    checkpoint/write tail back-fills with the next slice's tasks —
-    Spark's scheduler happily runs several jobs at once; actions were
-    only sequential because this loop called them sequentially. FIFO
-    scheduling keeps the earlier slice prioritized (the back-fill
-    behavior the guide recommends); failures propagate via result
-    iteration, so a failed slice still fails the micro-batch and the
-    checkpoint does not commit (replay semantics unchanged)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _dispatch(batch: DataFrame, batch_id: int, sub: Subscription) -> None:
-        slice_ = batch.filter(
-            F.col("name") == F.lit(sub.topic)
-        ).repartition(sub.partition_count, F.col("meta.key"))
-        evaluated = (
-            slice_.withColumn("error", _error_column(sub.process))
-            .withColumn(
-                "queue",
-                F.concat_ws(
-                    ":",
-                    F.lit(sub.service),
-                    F.col("partition_id").cast("string"),
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        ok = evaluated.filter(F.col("error").isNull()).drop("error")
-        failed = evaluated.filter(F.col("error").isNotNull()).withColumn(
-            "quarantined_at", F.current_timestamp()
-        )
-        ok.write.mode("overwrite").parquet(
-            f"{sub.processed_dir}/batch_id={batch_id}"
-        )
-        failed.write.mode("overwrite").parquet(
-            f"{sub.quarantine_dir}/batch_id={batch_id}"
-        )
-
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.localCheckpoint(eager=True)
-        # 2-3 jobs in flight is plenty (guide §2.6): enough to fill the
-        # write tail, not so many that they fight for executors.
-        with ThreadPoolExecutor(
-            max_workers=min(3, max(1, len(subscriptions)))
-        ) as pool:
-            for _ in pool.map(
-                lambda sub: _dispatch(batch, batch_id, sub), subscriptions
-            ):
-                pass
-
-    raw = (
+    Per micro-batch (one ingress file, ``maxFilesPerTrigger=1``): one
+    materialization of the tagged batch, then an ok and a quarantine
+    write per subscription — 1 + 2N jobs (see ``_batch_handler``). All
+    subscriptions advance on the shared checkpoint: one source offset
+    log, N logical consumers, per-topic quarantine isolation. The query
+    triggers every ``ROUTE_TRIGGER`` instead of polling the ingress
+    directory continuously."""
+    return (
         spark.readStream.schema(INGRESS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
-    )
-    return (
-        raw.writeStream.foreachBatch(_handle)
+        .writeStream.foreachBatch(_batch_handler(subscriptions))
+        .trigger(processingTime=ROUTE_TRIGGER)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
+
+
+@dataclass
+class Consumer:
+    """One consumer group (``service``) over one topic: ``route()`` with
+    a single ``Subscription``."""
+
+    spark: SparkSession
+    source_dir: str
+    service: str
+    topic: str
+    process: "Column | ProcessFn"
+    checkpoint_dir: str
+    processed_dir: str
+    quarantine_dir: str
+    partition_count: int = DEFAULT_PARTITION_COUNT
+
+    def _subscriptions(self) -> list[Subscription]:
+        return [
+            Subscription(
+                service=self.service,
+                topic=self.topic,
+                process=self.process,
+                processed_dir=self.processed_dir,
+                quarantine_dir=self.quarantine_dir,
+                partition_count=self.partition_count,
+            )
+        ]
+
+    def _handle_batch(self, batch: DataFrame, batch_id: int) -> None:
+        """One micro-batch through route()'s dispatch (replays a batch
+        id idempotently)."""
+        _batch_handler(self._subscriptions())(batch, batch_id)
+
+    def start(self) -> StreamingQuery:
+        return route(
+            self.spark, self.source_dir, self._subscriptions(), self.checkpoint_dir
+        )
+
+    def run_available(self) -> None:
+        """Process everything currently in the source, then stop —
+        the batch-ish drain used by tests and catch-up jobs."""
+        q = self.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination(30)
 
 
 def run_with_restarts(
