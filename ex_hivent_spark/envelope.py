@@ -86,17 +86,15 @@ def enrich(
     version_col: str = "version",
     cid_col: str | None = "cid",
     key_col: str | None = "key",
-    uuid_col: str | None = None,
-    created_at_col: str | None = None,
 ) -> DataFrame:
     """Server-side ingestion enrichment as a pure projection: builds the
     full envelope struct with producer/uuid/created_at/cid defaults and
     the derived partition key + partition id.
 
-    ``uuid`` and ``created_at`` are generated here (``uuid()``,
-    ``current_timestamp()``) unless ``uuid_col``/``created_at_col`` name
-    columns the caller already stamped. With both stamped and every
-    ``cid`` set, the projection re-evaluates to the same rows.
+    ``uuid`` and ``created_at`` are taken from ``df``'s columns of those
+    names when present, else generated here (``uuid()``,
+    ``current_timestamp()``). With both stamped and every ``cid`` set,
+    the projection re-evaluates to the same rows.
 
     Map-side only (no shuffle); pair with
     ``df.repartition(partition_count, "partition_id")`` when downstream
@@ -105,16 +103,18 @@ def enrich(
     cid = F.col(cid_col) if cid_col and cid_col in df.columns else F.lit(None).cast("string")
     key = F.col(key_col) if key_col and key_col in df.columns else F.lit(None).cast("string")
     key_final = derived_key(key, F.col(payload_col))
+    uuid = F.col("uuid") if "uuid" in df.columns else F.expr("uuid()")
+    created_at = (
+        F.col("created_at") if "created_at" in df.columns else F.current_timestamp()
+    )
     meta = F.struct(
         F.col(name_col).alias("name"),
         F.col(version_col).cast("int").alias("version"),
         F.lit(producer).alias("producer"),
         F.coalesce(cid, F.expr("uuid()")).alias("cid"),
-        (F.col(uuid_col) if uuid_col else F.expr("uuid()")).alias("uuid"),
+        uuid.alias("uuid"),
         key_final.alias("key"),
-        (F.col(created_at_col) if created_at_col else F.current_timestamp()).alias(
-            "created_at"
-        ),
+        created_at.alias("created_at"),
     )
     return df.select(
         F.col(name_col).alias("name"),

@@ -6,7 +6,9 @@ Reference lifecycle (lib/hivent/consumer.ex):
   (consumer.ex:105-107) → here: ``readStream`` + a topic match per
   subscription. Rows already carry the emitter's ``partition_id``
   (``pmod(xxhash64(meta.key), n)``), so the partition claim is read from
-  the row, not re-derived with a shuffle.
+  the row, not re-derived with a shuffle. Only Python-callable
+  subscriptions shuffle, by ``meta.key``, to spread the callback over
+  tasks.
 - process: user ``process/1`` callback per event (consumer.ex:25, 68-81);
   ``:ok`` → done, ``{:error, reason}`` → quarantine the ``{event, queue}``
   pair (consumer.ex:98-100).
@@ -63,9 +65,11 @@ class Subscription:
     {matcher, mapper, callback} triple of the reference's channel
     client, lib/hivent/phoenix/channel_client.ex:363-390).
 
-    ``partition_count`` is kept for the reference's subscribe signature;
-    it no longer shuffles — the queue name reads the ``partition_id``
-    the emitter stamped from the same key hash."""
+    The queue name reads the ``partition_id`` the emitter stamped from
+    the key hash, so ``partition_count`` does not shuffle an expression
+    subscription. For a Python-callable ``process`` it is the number of
+    tasks the callback runs in: the batch is repartitioned by
+    ``meta.key`` first, so each key's events stay in one task."""
 
     service: str
     topic: str
@@ -125,7 +129,10 @@ def _batch_handler(
     (unclaimed topics drop out), ``error`` and ``queue`` are computed
     once over that tagged frame, and the frame is materialized ONCE
     (localCheckpoint) so a non-deterministic or stateful process
-    callback cannot see a row twice across the writes. Each
+    callback cannot see a row twice across the writes. When any
+    subscription has a Python callable the batch is first repartitioned
+    by ``meta.key``: one emit is one ingress file, read as one task, and
+    a costly callback would otherwise run serially in it. Each
     subscription's ok and quarantine sinks are then written from it,
     serially in the foreachBatch thread — so every job runs under the
     query's job group and a ``stop()`` reaches it. Writes target
@@ -146,8 +153,14 @@ def _batch_handler(
         F.col("partition_id").cast("string"),
     )
     error = _error_column(subscriptions)
+    udf_tasks = max(
+        (s.partition_count for s in subscriptions if not isinstance(s.process, Column)),
+        default=0,
+    )
 
     def handle(batch: DataFrame, batch_id: int) -> None:
+        if udf_tasks:
+            batch = batch.repartition(udf_tasks, "meta.key")
         evaluated = (
             batch.withColumn(_SUB, F.explode(F.filter(tags, lambda t: t.isNotNull())))
             .withColumn("error", error)

@@ -115,8 +115,6 @@ class StreamEmitter:
             self.spark.createDataFrame(table).coalesce(1),
             self.producer,
             self.partition_count,
-            uuid_col="uuid",
-            created_at_col="created_at",
         )
         enriched.write.mode("append").parquet(self.ingress_dir)
         return enriched
