@@ -20,6 +20,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# Where each run writes its full record (every query's samples); the
+# printed line names it when it has to omit queries.
+FULL_RECORD = "BENCH_LOCAL.json"
+
 HEADLINE = [
     "q_agg_pricing_summary",
     "q_join_star_multiway",
@@ -263,8 +267,9 @@ def main() -> None:
     # field), and with 100 headline queries the full one-line JSON is
     # ~3 KB — r5's record lost its parsed object to exactly that.
     # So: (1) per-query times stream out first, one short line each,
-    # (2) the FULL record goes to BENCH_FULL.json next to this script
-    # (committed per round), and (3) the final printed line keeps the
+    # (2) the FULL record goes to FULL_RECORD next to this script
+    # (gitignored, so a run never rewrites the committed BENCH_FULL.json
+    # record), and (3) the final printed line keeps the
     # mandated schema but includes only as many per-query entries as
     # fit a 1800-char line (HEADLINE order, so the r1-era comparable
     # core always survives), with the overflow counted.
@@ -272,7 +277,7 @@ def main() -> None:
         print(f"# {name} {t}")
     try:
         here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
+        with open(os.path.join(here, FULL_RECORD), "w") as f:
             json.dump(
                 {**out, "samples": {n: ts for n, ts in samples.items() if ts}},
                 f,
@@ -292,7 +297,7 @@ def main() -> None:
     line_out["queries"] = kept
     if len(kept) < len(times):
         line_out["queries_omitted"] = len(times) - len(kept)
-        line_out["full_record"] = "BENCH_FULL.json"
+        line_out["full_record"] = FULL_RECORD
     print(json.dumps(line_out, separators=(",", ":")))
 
 

@@ -97,39 +97,37 @@ def fold_state(
     sum_cols: list[str],
     minmax_cols: list[str] = (),
 ) -> DataFrame:
-    """Fold a delta frame (``d_n`` + ``d_<col>`` decimal columns, plus
-    ``d_min_<col>``/``d_max_<col>`` when min/max are maintained) into a
-    view state (``n_rows`` + ``sum_<col>`` [+ ``min_/max_<col>``]): one
-    full-outer join on the group key, coalesced group-wise addition,
-    zero-count groups dropped. Shared by the batch refresh and the
-    streaming continuous view — both maintenance paths MUST fold
-    identically or their states would diverge from a recompute.
+    """Fold a delta frame into a view state. Deltas come in the state's
+    own shape (``n_rows`` + ``sum_<col>`` [+ ``min_/max_<col>``], as
+    :func:`_aggregate` builds it), so one batch's aggregate IS its
+    delta: one full-outer join on the group key, coalesced group-wise
+    addition, zero-count groups dropped. Shared by the batch refresh
+    and the streaming continuous view — both maintenance paths MUST
+    fold identically or their states would diverge from a recompute.
 
     Min/max fold monotonically (least/greatest, nulls skipped) — sound
     for ASSERTIONS only. A retraction can delete the reigning extreme,
     which no fold can recover; the batch refresh repairs
     retraction-touched groups with a pruned recompute afterwards
     (see refresh), and the append-only streaming path never retracts."""
+    s, d = state.alias("s"), deltas.alias("d")
     out_cols = [
         (
-            F.coalesce(F.col("n_rows"), F.lit(0))
-            + F.coalesce(F.col("d_n"), F.lit(0))
+            F.coalesce(s["n_rows"], F.lit(0))
+            + F.coalesce(d["n_rows"], F.lit(0))
         ).cast("bigint").alias("n_rows"),
     ] + [
         (
-            F.coalesce(F.col(f"sum_{c}"), F.lit(0).cast(DEC))
-            + F.coalesce(F.col(f"d_{c}"), F.lit(0).cast(DEC))
+            F.coalesce(s[f"sum_{c}"], F.lit(0).cast(DEC))
+            + F.coalesce(d[f"sum_{c}"], F.lit(0).cast(DEC))
         ).cast(DEC).alias(f"sum_{c}")
         for c in sum_cols
     ]
     for c in minmax_cols:
         out_cols += [
-            F.least(F.col(f"min_{c}"), F.col(f"d_min_{c}")).alias(f"min_{c}"),
-            F.greatest(F.col(f"max_{c}"), F.col(f"d_max_{c}")).alias(
-                f"max_{c}"
-            ),
+            F.least(s[f"min_{c}"], d[f"min_{c}"]).alias(f"min_{c}"),
+            F.greatest(s[f"max_{c}"], d[f"max_{c}"]).alias(f"max_{c}"),
         ]
-    s, d = state.alias("s"), deltas.alias("d")
     key_cols = [
         F.coalesce(s[c], d[c]).alias(c) for c in group_cols
     ]  # coalesce is key-identity here: sides only both-match when
@@ -194,14 +192,10 @@ def _committed_base_version(spark: SparkSession, view_dir: str) -> int | None:
     between them would otherwise make the next refresh re-apply the
     same diff and double-count. Returns None for a head whose note
     doesn't parse (pre-convention snapshot)."""
-    head = versioned.current_version(spark, view_dir)
+    head = versioned.head(spark, view_dir)
     if head is None:
         return None
-    mpath = f"{view_dir}/v={head}/{versioned.MANIFEST}"
-    if not fsutil.exists(spark, mpath):
-        return None
-    note = json.loads(fsutil.read_text_file(spark, mpath)).get("note", "")
-    match = _NOTE_RE.match(note)
+    match = _NOTE_RE.match(head["note"])
     return int(match.group(1)) if match else None
 
 
@@ -259,14 +253,14 @@ def refresh(spark: SparkSession, view_dir: str) -> dict:
     diff_types = dict(diff.dtypes)
     assert_rows = diff.filter(F.col("change") != "delete").select(
         *[F.col(c) for c in group_cols],
-        F.lit(1).cast("bigint").alias("d_n"),
-        *[F.col(c).cast(DEC).alias(f"d_{c}") for c in sum_cols],
+        F.lit(1).cast("bigint").alias("n_rows"),
+        *[F.col(c).cast(DEC).alias(f"sum_{c}") for c in sum_cols],
         *[F.col(c).alias(f"mm_{c}") for c in minmax_cols],
     )
     retract_rows = diff.filter(F.col("change") != "insert").select(
         *[F.col(f"old_{c}").alias(c) for c in group_cols],
-        F.lit(-1).cast("bigint").alias("d_n"),
-        *[(-F.col(f"old_{c}").cast(DEC)).alias(f"d_{c}") for c in sum_cols],
+        F.lit(-1).cast("bigint").alias("n_rows"),
+        *[(-F.col(f"old_{c}").cast(DEC)).alias(f"sum_{c}") for c in sum_cols],
         *[
             F.lit(None).cast(diff_types[c]).alias(f"mm_{c}")
             for c in minmax_cols
@@ -276,17 +270,17 @@ def refresh(spark: SparkSession, view_dir: str) -> dict:
         assert_rows.unionByName(retract_rows)
         .groupBy(*group_cols)
         .agg(
-            F.sum("d_n").cast("bigint").alias("d_n"),
+            F.sum("n_rows").cast("bigint").alias("n_rows"),
             *[
-                F.sum(f"d_{c}").cast(DEC).alias(f"d_{c}")
+                F.sum(f"sum_{c}").cast(DEC).alias(f"sum_{c}")
                 for c in sum_cols
             ],
             *[
                 agg
                 for c in minmax_cols
                 for agg in (
-                    F.min(f"mm_{c}").alias(f"d_min_{c}"),
-                    F.max(f"mm_{c}").alias(f"d_max_{c}"),
+                    F.min(f"mm_{c}").alias(f"min_{c}"),
+                    F.max(f"mm_{c}").alias(f"max_{c}"),
                 )
             ],
         )

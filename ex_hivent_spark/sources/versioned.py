@@ -31,7 +31,8 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ex_hivent_spark import fsutil
 
@@ -54,18 +55,31 @@ def current_version(spark: SparkSession, table_dir: str) -> int | None:
     return int(fsutil.read_text_file(spark, _pointer_path(table_dir)).strip())
 
 
+def head(spark: SparkSession, table_dir: str) -> dict | None:
+    """The committed head's manifest (version, rows, note, parent), or
+    None for a table with no snapshot."""
+    version = current_version(spark, table_dir)
+    if version is None:
+        return None
+    mpath = f"{_snapshot_dir(table_dir, version)}/{MANIFEST}"
+    return json.loads(fsutil.read_text_file(spark, mpath))
+
+
 def write_snapshot(
     spark: SparkSession, df: DataFrame, table_dir: str, note: str = ""
 ) -> int:
     """Publish ``df`` as the next snapshot and commit the pointer to
     it. Returns the new version number. The write is all-or-nothing:
     until the pointer rename, readers keep resolving the old snapshot.
+    The manifest's row count is observed on the write, not read back.
     """
     prev = current_version(spark, table_dir)
     version = 0 if prev is None else prev + 1
     snap = _snapshot_dir(table_dir, version)
+    written = Observation()
+    df = df.observe(written, F.count(F.lit(1)).alias("rows"))
     df.write.mode("overwrite").parquet(snap)
-    n_rows = spark.read.parquet(snap).count()
+    n_rows = written.get["rows"]
     fsutil.write_text_file(
         spark,
         f"{snap}/{MANIFEST}",
@@ -172,8 +186,6 @@ def snapshot_diff(
     unavoidable cost of diffing unordered snapshots — partition both
     snapshots by the key at write time (write_snapshot accepts any
     pre-partitioned frame) and it runs exchange-free."""
-    from pyspark.sql import functions as F
-
     old = read_snapshot(spark, table_dir, from_version)
     new = read_snapshot(spark, table_dir, to_version)
     cols = [c for c in new.columns if c != key_col]

@@ -1,12 +1,13 @@
 """Continuously-maintained aggregate views: the streaming twin of
 :mod:`ex_hivent_spark.matview`.
 
-Each micro-batch of an append-only stream is aggregated to a delta
-frame and folded into the SAME versioned view state the batch IVM
-maintains — so a dashboard aggregate is updated per batch at
-O(|batch| + |groups|) cost, published atomically (readers always see a
-complete snapshot, never a half-merged one), and time-travelable
-across batch folds like any versioned table.
+Each micro-batch of an append-only stream is aggregated once, in the
+state's own shape, and folded as the delta into the SAME versioned
+view state the batch IVM maintains — so a dashboard aggregate is
+updated per batch at O(|batch| + |groups|) cost and published
+atomically (readers always see a complete snapshot, never a
+half-merged one). Each fold then vacuums all but ``KEEP_VERSIONS``
+snapshots: time travel reaches the head and its parent only.
 
 Exactly-once without a separate ledger: the fold writes each new state
 through ``versioned.write_snapshot`` with the (query identity, batch
@@ -24,10 +25,11 @@ silently drop every restarted batch whose id is below the old fence.
 Fencing on the pair (Delta's txnAppId+txnVersion discipline) instead
 folds batches from a new query identity and skips only true replays.
 
-Scale shape: per batch, one partial-aggregating shuffle of the batch
-(|batch| rows) plus one join against the |groups|-sized state. The
-base stream is never re-read; state size is bounded by the group-key
-cardinality, not history length. Append-only streams produce only
+Scale shape: per batch, one read of the committed head (fence and
+state version), one partial-aggregating shuffle of the batch (|batch|
+rows) plus one join against the |groups|-sized state. The base stream
+is never re-read; state size is bounded by the group-key cardinality,
+and history by ``KEEP_VERSIONS``. Append-only streams produce only
 assertions (+1/+value); upstream deletes/updates belong to the batch
 path (matview.refresh over snapshot diffs), which shares the identical
 ``fold_state`` so the two maintenance routes cannot diverge.
@@ -40,15 +42,29 @@ Tables / Materialize-style continuous aggregates).
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ex_hivent_spark import fsutil, matview
+from ex_hivent_spark import matview
 from ex_hivent_spark.sources import versioned
 
 FENCE_PREFIX = "batch:"
+# Snapshots a fold retains: the committed head and its parent.
+KEEP_VERSIONS = 2
+
+
+def _committed_fence(head: dict | None) -> tuple[str | None, int]:
+    """The (query identity, batch id) pair fenced by the committed head
+    manifest; (None, -1) for an unfenced/absent head. Legacy notes
+    without an identity parse as (None, batch)."""
+    note = head["note"] if head is not None else ""
+    if not note.startswith(FENCE_PREFIX):
+        return None, -1
+    body = note[len(FENCE_PREFIX):]
+    if "@" in body:
+        n, txn = body.split("@", 1)
+        return txn, int(n)
+    return None, int(body)
 
 
 class ContinuousAggregateView:
@@ -74,30 +90,9 @@ class ContinuousAggregateView:
         # from the checkpoint location (batch ids are per-checkpoint).
         self._txn_id: str | None = None
 
-    def _committed_fence(self) -> tuple[str | None, int]:
-        """The (query identity, batch id) pair fenced by the committed
-        head snapshot; (None, -1) for an unfenced/absent head. Legacy
-        notes without an identity parse as (None, batch)."""
-        head = versioned.current_version(self.spark, self.view_dir)
-        if head is None:
-            return None, -1
-        manifest = json.loads(
-            fsutil.read_text_file(
-                self.spark,
-                f"{self.view_dir}/v={head}/{versioned.MANIFEST}",
-            )
-        )
-        note = manifest.get("note", "")
-        if not note.startswith(FENCE_PREFIX):
-            return None, -1
-        body = note[len(FENCE_PREFIX):]
-        if "@" in body:
-            n, txn = body.split("@", 1)
-            return txn, int(n)
-        return None, int(body)
-
     def _fold_batch(self, batch: DataFrame, batch_id: int) -> None:
-        fenced_txn, fenced_batch = self._committed_fence()
+        head = versioned.head(self.spark, self.view_dir)
+        fenced_txn, fenced_batch = _committed_fence(head)
         same_identity = (
             fenced_txn is None
             or self._txn_id is None
@@ -108,27 +103,17 @@ class ContinuousAggregateView:
         # A lower/equal batch id under a DIFFERENT query identity is a
         # restart with a fresh checkpoint (ids reset to 0): new data,
         # fold it — never silently drop it.
-        deltas = matview._aggregate(
+        delta = matview._aggregate(
             batch, self.group_cols, self.sum_cols, self.minmax_cols
-        ).withColumnRenamed("n_rows", "d_n")
-        for c in self.sum_cols:
-            deltas = deltas.withColumnRenamed(f"sum_{c}", f"d_{c}")
-        for c in self.minmax_cols:
-            deltas = deltas.withColumnRenamed(
-                f"min_{c}", f"d_min_{c}"
-            ).withColumnRenamed(f"max_{c}", f"d_max_{c}")
-        if versioned.current_version(self.spark, self.view_dir) is None:
-            new_state = matview._aggregate(
-                batch, self.group_cols, self.sum_cols, self.minmax_cols
-            )
+        )
+        if head is None:
+            new_state = delta
         else:
-            state = versioned.read_snapshot(self.spark, self.view_dir)
+            state = versioned.read_snapshot(
+                self.spark, self.view_dir, head["version"]
+            )
             new_state = matview.fold_state(
-                state,
-                deltas,
-                self.group_cols,
-                self.sum_cols,
-                self.minmax_cols,
+                state, delta, self.group_cols, self.sum_cols, self.minmax_cols
             )
         fence = (
             f"{FENCE_PREFIX}{batch_id}@{self._txn_id}"
@@ -138,6 +123,7 @@ class ContinuousAggregateView:
         versioned.write_snapshot(
             self.spark, new_state, self.view_dir, note=fence
         )
+        versioned.vacuum(self.spark, self.view_dir, keep_last=KEEP_VERSIONS)
 
     def start(self, stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
         self._txn_id = checkpoint_dir

@@ -1,0 +1,168 @@
+"""The continuous view's one fold path: one read of the committed head,
+one aggregate of the batch, a snapshot write that observes its row count
+instead of reading it back, and a history bounded to head and parent."""
+
+from __future__ import annotations
+
+import json
+import os
+
+import pytest
+
+from ex_hivent_spark import matview
+from ex_hivent_spark.sources import versioned
+from ex_hivent_spark.streaming.continuous_view import ContinuousAggregateView
+
+SCHEMA = "cat string, val double"
+
+
+def _rows(df):
+    cols = sorted(df.columns)
+    return sorted([tuple(r[c] for c in cols) for r in df.collect()], key=repr)
+
+
+def _versions(view_dir):
+    return sorted(int(n[2:]) for n in os.listdir(view_dir) if n.startswith("v="))
+
+
+def _batch(spark, i):
+    return spark.createDataFrame(
+        [(f"g{j % 3}", float(i * 10 + j)) for j in range(6)], SCHEMA
+    )
+
+
+def _settled_job_ids(spark, group):
+    """Job ids of ``group`` once the listener bus has delivered every
+    job start, so a count taken right after a batch is complete."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def test_steady_fold_runs_at_most_five_jobs(spark, tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+
+    def add_file(i):
+        with open(src / f"f{i}.json", "w") as f:
+            for j in range(200):
+                f.write(json.dumps({"cat": f"g{j % 40}", "val": i + j * 0.5}) + "\n")
+
+    view = ContinuousAggregateView(spark, str(tmp_path / "view"), ["cat"], ["val"])
+    stream = (
+        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).json(str(src))
+    )
+    add_file(0)
+    q = view.start(stream, str(tmp_path / "chk"))
+    try:
+        q.processAllAvailable()
+        group = str(q.runId)
+        before = _settled_job_ids(spark, group)
+        add_file(1)
+        q.processAllAvailable()
+        fold_jobs = _settled_job_ids(spark, group) - before
+    finally:
+        q.stop()
+    assert 1 <= len(fold_jobs) <= 5
+    assert versioned.current_version(spark, view.view_dir) == 1
+
+
+def test_history_is_bounded_and_crash_safe(spark, tmp_path):
+    view_dir = str(tmp_path / "view")
+    view = ContinuousAggregateView(spark, view_dir, ["cat"], ["val"])
+    for i in range(4):
+        view._fold_batch(_batch(spark, i), i)
+    # a crashed fold leaves an uncommitted snapshot above the head
+    head = versioned.current_version(spark, view_dir)
+    spark.createDataFrame([("junk", 1.0)], SCHEMA).write.parquet(
+        f"{view_dir}/v={head + 1}"
+    )
+    view._fold_batch(_batch(spark, 4), 4)
+
+    head = versioned.current_version(spark, view_dir)
+    assert head == 4
+    assert _versions(view_dir) == [head - 1, head]
+    assert versioned.read_snapshot(spark, view_dir, head - 1).count() == 3
+    with pytest.raises(FileNotFoundError):
+        versioned.read_snapshot(spark, view_dir, head - 2)
+    seen = _batch(spark, 0)
+    for i in range(1, 5):
+        seen = seen.unionByName(_batch(spark, i))
+    want = _rows(matview._aggregate(seen, ["cat"], ["val"]))
+    assert _rows(view.read()) == want
+
+    # a replayed batch id is still fenced: no new version, same state
+    view._fold_batch(spark.createDataFrame([("g0", 99.0)], SCHEMA), 4)
+    assert versioned.current_version(spark, view_dir) == head
+    assert _rows(view.read()) == want
+    assert _versions(view_dir) == [head - 1, head]
+
+
+def test_first_and_later_folds_share_one_path(spark, tmp_path, monkeypatch):
+    aggregate = matview._aggregate
+    calls = {"aggregate": 0, "fold_state": 0}
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(matview, "_aggregate", counted("aggregate", aggregate))
+    monkeypatch.setattr(
+        matview, "fold_state", counted("fold_state", matview.fold_state)
+    )
+    view = ContinuousAggregateView(
+        spark, str(tmp_path / "view"), ["cat"], ["val"], minmax_cols=["val"]
+    )
+    batches = [
+        [("x", 5.0), (None, 1.0), ("y", 3.0)],
+        [("x", 9.5), (None, -2.0), ("z", 0.25), (None, 7.0)],
+    ]
+    seen = []
+    for i, rows in enumerate(batches):
+        seen += rows
+        view._fold_batch(spark.createDataFrame(rows, SCHEMA), i)
+        assert calls == {"aggregate": i + 1, "fold_state": i}
+        want = aggregate(
+            spark.createDataFrame(seen, SCHEMA), ["cat"], ["val"], ["val"]
+        )
+        assert _rows(view.read()) == _rows(want)
+    null_row = [r for r in view.read().collect() if r["cat"] is None]
+    assert len(null_row) == 1
+    assert (null_row[0]["n_rows"], null_row[0]["min_val"], null_row[0]["max_val"]) == (
+        3,
+        -2.0,
+        7.0,
+    )
+
+
+def test_head_is_the_committed_manifest(spark, tmp_path):
+    table = str(tmp_path / "t")
+    assert versioned.head(spark, table) is None
+    versioned.write_snapshot(spark, spark.range(7), table, note="first")
+    assert versioned.head(spark, table) == {
+        "version": 0,
+        "rows": 7,
+        "note": "first",
+        "parent": None,
+    }
+    versioned.write_snapshot(spark, spark.range(0), table, note="empty")
+    assert versioned.head(spark, table) == {
+        "version": 1,
+        "rows": 0,
+        "note": "empty",
+        "parent": 0,
+    }
+
+
+def test_write_snapshot_does_not_read_back(spark, tmp_path):
+    sc = spark.sparkContext
+    group = f"write-snapshot-{tmp_path.name}"
+    sc.setJobGroup(group, "write_snapshot")
+    try:
+        versioned.write_snapshot(spark, spark.range(25), str(tmp_path / "t"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(_settled_job_ids(spark, group)) == 1
+    assert versioned.head(spark, str(tmp_path / "t"))["rows"] == 25
