@@ -26,7 +26,7 @@ SYSTEM = "system"
 #: The engine's settings, each env-indirected (config.ex's pattern of
 #: declaring {:system, "VAR"} entries in config.exs).
 SETTINGS: dict[str, tuple] = {
-    "cpus": (SYSTEM, "SPARK_GRAFT_CPUS", "32"),
+    "cpus": (SYSTEM, "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))),
     "sf_dir": (SYSTEM, "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
     "driver_memory": (SYSTEM, "SPARK_DRIVER_MEMORY", "8g"),
     "master": (SYSTEM, "SPARK_MASTER", None),

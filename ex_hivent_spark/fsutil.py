@@ -43,7 +43,8 @@ from pyspark.sql import SparkSession
 READY_MARKER = "_COMMIT_READY"
 
 
-def _fs(spark: SparkSession):
+def hadoop_fs(spark: SparkSession):
+    """The session's Hadoop FileSystem and its ``Path`` class."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     Path = jvm.org.apache.hadoop.fs.Path
@@ -57,7 +58,7 @@ def staging_path(target: str) -> str:
 
 def write_text_file(spark: SparkSession, path: str, text: str) -> None:
     """Write a small text file through the Hadoop FS (works on any HCFS)."""
-    fs, Path = _fs(spark)
+    fs, Path = hadoop_fs(spark)
     out = fs.create(Path(path), True)
     try:
         out.write(bytearray(text, "utf-8"))
@@ -66,7 +67,7 @@ def write_text_file(spark: SparkSession, path: str, text: str) -> None:
 
 
 def read_text_file(spark: SparkSession, path: str) -> str:
-    fs, Path = _fs(spark)
+    fs, Path = hadoop_fs(spark)
     stream = fs.open(Path(path))
     try:
         jvm = spark.sparkContext._jvm
@@ -76,14 +77,14 @@ def read_text_file(spark: SparkSession, path: str) -> str:
 
 
 def exists(spark: SparkSession, path: str) -> bool:
-    fs, Path = _fs(spark)
+    fs, Path = hadoop_fs(spark)
     return bool(fs.exists(Path(path)))
 
 
 def recover_swap(spark: SparkSession, target: str) -> bool:
     """Repair a half-completed publish; return True iff ``target`` is
     now a readable published directory."""
-    fs, Path = _fs(spark)
+    fs, Path = hadoop_fs(spark)
     staging = Path(staging_path(target))
     ready = Path(f"{staging_path(target)}/{READY_MARKER}")
     backup = Path(f"{target}__old")
@@ -113,7 +114,7 @@ def recover_swap(spark: SparkSession, target: str) -> bool:
 def publish_swap(spark: SparkSession, target: str) -> None:
     """Atomically promote ``<target>__staging`` (already fully written)
     to ``target``. Crash at any step is repaired by recover_swap."""
-    fs, Path = _fs(spark)
+    fs, Path = hadoop_fs(spark)
     staging = staging_path(target)
     write_text_file(spark, f"{staging}/{READY_MARKER}", "ready\n")
     backup = Path(f"{target}__old")

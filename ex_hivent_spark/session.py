@@ -13,13 +13,15 @@ scale-out behavior:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 from ex_hivent_spark.config import setting, setting_integer
 
 
 def _default_shuffle_partitions() -> int:
-    return setting_integer("cpus", 32)
+    return setting_integer("cpus", len(os.sched_getaffinity(0)))
 
 
 def get_session(
@@ -56,7 +58,7 @@ def get_session(
             active.conf.set(k, v)
         return active
 
-    cpus = setting("cpus", "32")
+    cpus = setting("cpus", str(len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or setting("master") or f"local[{cpus}]")

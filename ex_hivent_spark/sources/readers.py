@@ -1,6 +1,6 @@
-"""Event sources beyond parquet: JSON / CSV batch readers with the
-envelope schema, file-streaming readers, and a rate-source generator
-for load tests.
+"""Event sources beyond parquet: JSON / CSV / ORC batch readers with the
+envelope or events-table schema. The streaming ingress is read by
+``streaming.consumer.route``.
 
 The reference's wire format is JSON → MessagePack → gzip
 (message_pack_serializer.ex:10-33) — transport, not semantics; at rest
@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ex_hivent_spark.envelope import EVENT_SCHEMA
-from ex_hivent_spark.streaming.consumer import INGRESS_SCHEMA
 
 EVENTS_TABLE_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -37,42 +36,6 @@ def read_events_csv(spark: SparkSession, path: str, header: bool = True) -> Data
         .option("header", str(header).lower())
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
         .csv(path)
-    )
-
-
-def stream_ingress(
-    spark: SparkSession, path: str, fmt: str = "parquet", max_files: int = 1
-) -> DataFrame:
-    """File-streaming source over an ingress directory (the consumer's
-    subscription feed; see streaming/consumer.py). ``fmt`` is parquet or
-    json — at scale this becomes a Kafka source with the same downstream
-    plan."""
-    reader = spark.readStream.schema(INGRESS_SCHEMA).option(
-        "maxFilesPerTrigger", max_files
-    )
-    return reader.parquet(path) if fmt == "parquet" else reader.json(path)
-
-
-def rate_events(
-    spark: SparkSession, rows_per_second: int = 100, n_users: int = 16
-) -> DataFrame:
-    """Synthetic unbounded event stream from the rate source — for
-    soak/load tests of consumers without any storage."""
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second
-    ).load()
-    return rate.select(
-        F.col("value").alias("event_id"),
-        F.col("timestamp").alias("ts"),
-        F.pmod(F.col("value"), F.lit(n_users)).alias("user_id"),
-        F.element_at(
-            F.array(
-                F.lit("click"), F.lit("view"), F.lit("purchase"),
-                F.lit("signup"), F.lit("error"),
-            ),
-            (F.pmod(F.col("value"), F.lit(5)) + 1).cast("int"),
-        ).alias("event_type"),
-        (F.pmod(F.col("value") * 37, F.lit(500)) / 1.0).alias("value"),
     )
 
 

@@ -1,66 +1,24 @@
-"""Sinks: quarantine writer and the topic multiplexer.
+"""Sinks: the batch-keyed overwrite every ``foreachBatch`` writer goes
+through, and the partitioned and bucketed table layouts.
 
-Quarantine (consumer.ex:98-100): failed events are stored as the
-``{event, queue}`` pair plus the error and a timestamp — an append-only
-parquet table partitioned by topic name so per-topic redrive jobs prune
-to their own files.
-
-Topic multiplexer (SURVEY.md §4.2): the reference runs one WebSocket
-channel per topic; a naive Spark translation runs one streaming query
-per topic, re-reading the source N times. The multiplexer is the
-scale-correct shape: ONE streaming query, and inside each micro-batch
-the (cached) batch is routed to every topic's sink — one source pass
-regardless of consumer count.
+A micro-batch is written with ``write_batch``: the source replays a
+batch after a crash (at-least-once), and the batch-keyed overwrite
+replaces the replay's own output instead of appending a second copy.
+A replayable source plus this idempotent sink gives exactly-once sink
+contents, per batch and per sink.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Mapping
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 
-def write_quarantine(
-    failed: DataFrame, quarantine_dir: str, partition_by_topic: bool = True
-) -> None:
-    """Append failed {event, queue, error} rows with quarantined_at."""
-    out = failed.withColumn("quarantined_at", F.current_timestamp())
-    writer = out.write.mode("append")
-    if partition_by_topic:
-        writer = writer.partitionBy("name")
-    writer.parquet(quarantine_dir)
-
-
-def topic_multiplexer(
-    stream: DataFrame,
-    topic_sinks: Mapping[str, str],
-    checkpoint_dir: str,
-    name_col: str = "name",
-) -> StreamingQuery:
-    """One pass over the stream, N topic-filtered parquet sinks.
-
-    Each micro-batch is persisted once, then each topic's subset is
-    appended to its sink; the persist guarantees the source (and any
-    upstream computation) is evaluated once per batch, not per topic.
-    """
-
-    def route(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
-        try:
-            for topic, path in topic_sinks.items():
-                batch.filter(F.col(name_col) == F.lit(topic)).write.mode(
-                    "append"
-                ).parquet(path)
-        finally:
-            batch.unpersist()
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+def write_batch(df: DataFrame, sink_dir: str, batch_id: int) -> None:
+    """Write micro-batch ``batch_id`` to ``<sink_dir>/batch_id=<N>`` with
+    overwrite, so a replay of the batch overwrites the same directory.
+    Reading ``sink_dir`` yields every batch, with a ``batch_id``
+    partition column."""
+    df.write.mode("overwrite").parquet(f"{sink_dir}/batch_id={batch_id}")
 
 
 def write_partitioned(

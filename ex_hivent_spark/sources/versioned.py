@@ -18,7 +18,9 @@ Commit protocol (single-writer, HCFS rename semantics like fsutil):
 
 A crash before step 3 leaves an orphan ``v=N`` directory that the next
 write overwrites or vacuum removes; readers never see it because the
-pointer still names the previous snapshot. Rename of a small file is
+pointer still names the previous snapshot. Step 3 is a delete and a
+rename; a crash between them leaves only ``_VERSION.tmp``, which the
+next pointer read rolls forward. Rename of a small file is
 atomic on local disk/HDFS; on S3-proper this pointer is the one object
 to CAS via a metadata service.
 
@@ -49,10 +51,22 @@ def _snapshot_dir(table_dir: str, version: int) -> str:
 
 
 def current_version(spark: SparkSession, table_dir: str) -> int | None:
-    """The committed version, or None for a table with no snapshot."""
-    if not fsutil.exists(spark, _pointer_path(table_dir)):
-        return None
-    return int(fsutil.read_text_file(spark, _pointer_path(table_dir)).strip())
+    """The committed version, or None for a table with no snapshot.
+
+    A crash between the commit's pointer delete and rename leaves only
+    ``_VERSION.tmp``. It is written after the snapshot and its manifest,
+    so a complete one names a complete snapshot and is rolled forward
+    (the rule ``fsutil.recover_swap`` follows for a ready staging dir)."""
+    fs, Path = fsutil.hadoop_fs(spark)
+    pointer = _pointer_path(table_dir)
+    if not fs.exists(Path(pointer)):
+        tmp = f"{pointer}.tmp"
+        if not fs.exists(Path(tmp)):
+            return None
+        if not fsutil.read_text_file(spark, tmp).strip().isdigit():
+            return None  # crashed writing the first pointer: no commit
+        fs.rename(Path(tmp), Path(pointer))
+    return int(fsutil.read_text_file(spark, pointer).strip())
 
 
 def head(spark: SparkSession, table_dir: str) -> dict | None:
@@ -89,16 +103,11 @@ def write_snapshot(
         ),
     )
     # two-step pointer commit: tmp write + atomic rename
-    sc = spark.sparkContext
-    hadoop = sc._jvm.org.apache.hadoop
-    fs = hadoop.fs.FileSystem.get(sc._jsc.hadoopConfiguration())
-    tmp = hadoop.fs.Path(f"{table_dir}/{POINTER}.tmp")
-    dst = hadoop.fs.Path(_pointer_path(table_dir))
-    out = fs.create(tmp, True)
-    out.write(bytearray(str(version).encode()))
-    out.close()
-    fs.delete(dst, False)
-    fs.rename(tmp, dst)
+    pointer = _pointer_path(table_dir)
+    fsutil.write_text_file(spark, f"{pointer}.tmp", str(version))
+    fs, Path = fsutil.hadoop_fs(spark)
+    fs.delete(Path(pointer), False)
+    fs.rename(Path(f"{pointer}.tmp"), Path(pointer))
     return version
 
 
@@ -144,12 +153,10 @@ def vacuum(
     head = current_version(spark, table_dir)
     if head is None:
         return []
-    sc = spark.sparkContext
-    hadoop = sc._jvm.org.apache.hadoop
-    fs = hadoop.fs.FileSystem.get(sc._jsc.hadoopConfiguration())
+    fs, Path = fsutil.hadoop_fs(spark)
     removed: list[int] = []
     cutoff = head - max(keep_last, 1) + 1
-    for status in fs.listStatus(hadoop.fs.Path(table_dir)):
+    for status in fs.listStatus(Path(table_dir)):
         name = status.getPath().getName()
         if not name.startswith("v="):
             continue

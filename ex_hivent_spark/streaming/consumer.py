@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ex_hivent_spark.envelope import DEFAULT_PARTITION_COUNT, EVENT_SCHEMA
+from ex_hivent_spark.sources.sinks import write_batch
 
 INGRESS_SCHEMA = T.StructType(
     [*EVENT_SCHEMA.fields, T.StructField("partition_id", T.IntegerType())]
@@ -135,11 +136,11 @@ def _batch_handler(
     a costly callback would otherwise run serially in it. Each
     subscription's ok and quarantine sinks are then written from it,
     serially in the foreachBatch thread — so every job runs under the
-    query's job group and a ``stop()`` reaches it. Writes target
-    ``batch_id``-keyed directories with overwrite, including empty
-    outcomes: a replayed batch overwrites the same directories instead
-    of appending duplicates, which upgrades the source's at-least-once
-    delivery to effectively-once sink contents, per subscription."""
+    query's job group and a ``stop()`` reaches it. Every write, empty
+    outcomes included, goes through ``sinks.write_batch``: a replayed
+    batch overwrites its own directories instead of appending
+    duplicates, which upgrades the source's at-least-once delivery to
+    effectively-once sink contents, per subscription."""
     tags = F.array(
         *[
             F.when(F.col("name") == F.lit(s.topic), F.lit(i))
@@ -169,14 +170,12 @@ def _batch_handler(
         )
         for i, sub in enumerate(subscriptions):
             mine = evaluated.filter(F.col(_SUB) == F.lit(i)).drop(_SUB)
-            mine.filter(F.col("error").isNull()).drop("error").write.mode(
-                "overwrite"
-            ).parquet(f"{sub.processed_dir}/batch_id={batch_id}")
-            mine.filter(F.col("error").isNotNull()).withColumn(
+            ok = mine.filter(F.col("error").isNull()).drop("error")
+            bad = mine.filter(F.col("error").isNotNull()).withColumn(
                 "quarantined_at", F.current_timestamp()
-            ).write.mode("overwrite").parquet(
-                f"{sub.quarantine_dir}/batch_id={batch_id}"
             )
+            write_batch(ok, sub.processed_dir, batch_id)
+            write_batch(bad, sub.quarantine_dir, batch_id)
 
     return handle
 
@@ -211,69 +210,22 @@ def route(
     )
 
 
-@dataclass
-class Consumer:
-    """One consumer group (``service``) over one topic: ``route()`` with
-    a single ``Subscription``."""
-
-    spark: SparkSession
-    source_dir: str
-    service: str
-    topic: str
-    process: "Column | ProcessFn"
-    checkpoint_dir: str
-    processed_dir: str
-    quarantine_dir: str
-    partition_count: int = DEFAULT_PARTITION_COUNT
-
-    def _subscriptions(self) -> list[Subscription]:
-        return [
-            Subscription(
-                service=self.service,
-                topic=self.topic,
-                process=self.process,
-                processed_dir=self.processed_dir,
-                quarantine_dir=self.quarantine_dir,
-                partition_count=self.partition_count,
-            )
-        ]
-
-    def _handle_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """One micro-batch through route()'s dispatch (replays a batch
-        id idempotently)."""
-        _batch_handler(self._subscriptions())(batch, batch_id)
-
-    def start(self) -> StreamingQuery:
-        return route(
-            self.spark, self.source_dir, self._subscriptions(), self.checkpoint_dir
-        )
-
-    def run_available(self) -> None:
-        """Process everything currently in the source, then stop —
-        the batch-ish drain used by tests and catch-up jobs."""
-        q = self.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination(30)
-
-
 def run_with_restarts(
     start_query: Callable[[], StreamingQuery],
     max_tries: int = 3,
     backoff_s: float = 1.0,
 ) -> StreamingQuery:
-    """Bounded-restart supervisor for a streaming query: on failure,
-    retry after a linearly growing delay; give up (re-raise) after
+    """Bounded-restart supervisor for a streaming query: on failure to
+    start (the reference's failed connect) or a failed run, retry after
+    a linearly growing delay; give up (re-raise) after
     ``max_tries`` (emitter.ex:113-139 — including its linear
     ``timer += backoff`` growth; the reference's off-by-one ``<=`` that
     admits an extra attempt is NOT reproduced). Recovery is from the
     query's checkpoint, so no data is lost or reprocessed into sinks."""
     attempt = 0
     while True:
-        query = start_query()
         try:
+            query = start_query()
             query.awaitTermination()
             return query
         except Exception:

@@ -18,8 +18,8 @@ lazy localCheckpoint so the live data is scanned ONCE per trigger
 (the bucket aggregate feeds both the join and the nb total); the PSI
 fold happens on that tiny frame. State: NONE — each batch is scored
 independently, so there is no watermark, no state store, and replay
-is handled by the batch_id-keyed idempotent overwrite (consumer.py's
-effectively-once sink discipline).
+is handled by the batch-keyed idempotent overwrite of
+``sinks.write_batch`` (route()'s effectively-once sink discipline).
 
 Baseline commits are ATOMIC: write_baseline publishes the histogram
 through the versioned-table pointer commit (sources/versioned.py —
@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ex_hivent_spark.functions.decimals import dround
+from ex_hivent_spark.sources.sinks import write_batch
 
 DEFAULT_WIDTH = 50.0
 DEFAULT_BUCKETS = 10
@@ -169,15 +170,15 @@ def psi_monitor(
 ) -> StreamingQuery:
     """Start (and return) the monitor: each micro-batch is PSI-scored
     against the CURRENT committed baseline and one
-    (batch_id, n_events, psi, drifted) row lands at
-    ``out_dir/batch_id=N`` (idempotent overwrite on replay)."""
+    (batch_id, n_events, psi, drifted) row lands in ``out_dir`` through
+    ``sinks.write_batch`` (idempotent overwrite on replay)."""
 
     def score(batch_df: DataFrame, batch_id: int) -> None:
         baseline = read_baseline(spark, baseline_path)
         row = psi_of(
             batch_df, baseline, value_col, width, n_buckets
         ).collect()[0]
-        spark.createDataFrame(
+        scored = spark.createDataFrame(
             [
                 (
                     batch_id,
@@ -187,7 +188,8 @@ def psi_monitor(
                 )
             ],
             "batch_id bigint, n_events bigint, psi double, drifted boolean",
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+        )
+        write_batch(scored, out_dir, batch_id)
 
     return (
         stream_df.writeStream.foreachBatch(score)

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ex_hivent_spark.sources.sinks import write_batch
+
 
 def dim_enriched_stream(
     spark: SparkSession,
@@ -40,14 +42,16 @@ def dim_enriched_stream(
     """Start (and return) a query enriching ``stream_df`` with the
     dimension at ``dim_path``, re-read at every micro-batch and
     broadcast into the join. ``how='left'`` keeps events whose key has
-    no dimension row yet (late-arriving dims are the norm)."""
+    no dimension row yet (late-arriving dims are the norm). Batches land
+    through ``sinks.write_batch``, so a replayed batch overwrites its
+    own output instead of appending it twice."""
 
     def enrich(batch_df: DataFrame, batch_id: int) -> None:
         dim = spark.read.parquet(dim_path)
         joined = batch_df.join(F.broadcast(dim), on, how)
         if transform is not None:
             joined = transform(joined)
-        joined.write.mode("append").parquet(out_dir)
+        write_batch(joined, out_dir, batch_id)
 
     return (
         stream_df.writeStream.foreachBatch(enrich)

@@ -54,5 +54,6 @@ def test_engine_settings_env_override(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "16")
     assert config.setting_integer("cpus") == 16
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
-    assert config.setting_integer("cpus") == 32  # preconfigured default
+    # preconfigured default: the CPUs this process may run on
+    assert config.setting_integer("cpus") == len(os.sched_getaffinity(0))
     assert os.environ.get("SPARK_GRAFT_CPUS") is None

@@ -1,4 +1,4 @@
-"""Source readers, topic multiplexer sink, and the custom stateful
+"""Source readers, one-pass topic routing, and the custom stateful
 operator."""
 
 from __future__ import annotations
@@ -8,12 +8,8 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from ex_hivent_spark.sources.readers import (
-    read_events_csv,
-    read_events_json,
-    stream_ingress,
-)
-from ex_hivent_spark.sources.sinks import topic_multiplexer
+from ex_hivent_spark.sources.readers import read_events_csv, read_events_json
+from ex_hivent_spark.streaming.consumer import Subscription, route
 from ex_hivent_spark.streaming.emitter import StreamEmitter
 from ex_hivent_spark.streaming.stateful import user_running_totals
 
@@ -51,9 +47,17 @@ def test_topic_multiplexer_single_pass(spark, tmp_path):
     em.emit("topic:a", {"i": 3}, version=1)
 
     sinks = {"topic:a": str(tmp_path / "a"), "topic:b": str(tmp_path / "b")}
-    q = topic_multiplexer(
-        stream_ingress(spark, ingress), sinks, str(tmp_path / "cp")
-    )
+    subs = [
+        Subscription(
+            service="svc",
+            topic=topic,
+            process=F.lit(None).cast("string"),  # every event is ok
+            processed_dir=path,
+            quarantine_dir=f"{path}_quarantine",
+        )
+        for topic, path in sinks.items()
+    ]
+    q = route(spark, ingress, subs, str(tmp_path / "cp"))
     q.processAllAvailable()
     q.stop()
     q.awaitTermination(30)

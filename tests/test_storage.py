@@ -160,6 +160,45 @@ def test_versioned_pointer_commit_is_crash_safe(spark, tmp_path):
     assert v == 1 and V.read_snapshot(spark, t).count() == 6
 
 
+def test_versioned_pointer_rolls_forward_after_crash_mid_rename(spark, tmp_path):
+    """A crash between the pointer commit's delete and rename leaves
+    only ``_VERSION.tmp``: the head must still resolve to the committed
+    version, and the next continuous-view fold must keep the exact state
+    instead of restarting from its own batch and vacuuming every real
+    snapshot as an orphan above the head."""
+    import os
+
+    from ex_hivent_spark.sources import versioned as V
+    from ex_hivent_spark.streaming.continuous_view import ContinuousAggregateView
+
+    t = str(tmp_path / "view")
+    view = ContinuousAggregateView(spark, t, ["cat"], ["val"])
+
+    def fold(batch_id):
+        batch = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "cat string, val double")
+        view._fold_batch(batch, batch_id)
+
+    def state():
+        return sorted(
+            (r.cat, r.n_rows, float(r.sum_val)) for r in view.read().collect()
+        )
+
+    for batch_id in range(3):
+        fold(batch_id)
+    assert state() == [("a", 3, 3.0), ("b", 3, 6.0)]
+    committed = V.current_version(spark, t)
+
+    os.rename(f"{t}/_VERSION", f"{t}/_VERSION.tmp")
+    os.remove(f"{t}/._VERSION.crc")
+    assert V.head(spark, t)["version"] == committed
+    assert os.path.exists(f"{t}/_VERSION")
+
+    fold(3)
+    assert state() == [("a", 4, 4.0), ("b", 4, 8.0)]
+    assert V.current_version(spark, t) == committed + 1
+    assert V.read_snapshot(spark, t, committed).count() == 2
+
+
 def test_dynamic_partition_pruning_on_join(spark, sf_dir, tmp_path):
     """Catalyst's dynamic partition pruning must kick in when a
     partitioned fact table is joined against a filtered dim: the fact

@@ -12,7 +12,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from ex_hivent_spark.streaming.consumer import Consumer
+from ex_hivent_spark.streaming.consumer import Subscription, _batch_handler, route
 from ex_hivent_spark.streaming.emitter import StreamEmitter
 from ex_hivent_spark.streaming.windows import (
     dedup_within_watermark,
@@ -30,18 +30,31 @@ def dirs(tmp_path):
     return d
 
 
-def make_consumer(spark, dirs, process, topic="some:event"):
-    return Consumer(
-        spark=spark,
-        source_dir=dirs["ingress"],
+def make_subscription(dirs, process, topic="some:event"):
+    return Subscription(
         service="a_service",
         topic=topic,
         process=process,
-        checkpoint_dir=dirs["checkpoint"],
         processed_dir=dirs["processed"],
         quarantine_dir=dirs["quarantine"],
         partition_count=2,
     )
+
+
+def drain(spark, dirs, process, topic="some:event"):
+    """route() with one subscription over everything currently in the
+    ingress, then stop — the batch-ish drain of a catch-up job."""
+    q = route(
+        spark,
+        dirs["ingress"],
+        [make_subscription(dirs, process, topic)],
+        dirs["checkpoint"],
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination(30)
 
 
 def make_process_response():
@@ -66,7 +79,7 @@ class TestConsumerQuarantine:
         em.emit("some:event", {"response": "error"}, version=1, key="k2")
         em.emit("other:event", {"response": "error"}, version=1)  # other topic
 
-        make_consumer(spark, dirs, make_process_response()).run_available()
+        drain(spark, dirs, make_process_response())
 
         ok = spark.read.parquet(dirs["processed"])
         bad = spark.read.parquet(dirs["quarantine"])
@@ -88,7 +101,7 @@ class TestConsumerQuarantine:
             F.get_json_object("payload", "$.response") == "error",
             F.lit("rejected by expression"),
         )
-        make_consumer(spark, dirs, expr).run_available()
+        drain(spark, dirs, expr)
         assert spark.read.parquet(dirs["processed"]).count() == 1
         bad = spark.read.parquet(dirs["quarantine"])
         assert bad.count() == 1
@@ -97,10 +110,9 @@ class TestConsumerQuarantine:
     def test_checkpoint_restart_exactly_once(self, spark, dirs):
         em = StreamEmitter(spark, dirs["ingress"], producer="svc")
         em.emit("some:event", {"n": 1}, version=1)
-        consumer = make_consumer(spark, dirs, lambda e: None)
-        consumer.run_available()
+        drain(spark, dirs, lambda e: None)
         em.emit("some:event", {"n": 2}, version=1)
-        consumer.run_available()  # same checkpoint — only the new file runs
+        drain(spark, dirs, lambda e: None)  # same checkpoint — only the new file runs
 
         ok = spark.read.parquet(dirs["processed"])
         assert ok.count() == 2  # each event exactly once despite restart
@@ -428,20 +440,20 @@ class TestConsumerIdempotency:
         em.emit("some:event", {"response": "ok"}, version=1, key="k1")
         em.emit("some:event", {"response": "error"}, version=1, key="k2")
 
-        consumer = make_consumer(spark, dirs, make_process_response())
+        handle = _batch_handler([make_subscription(dirs, make_process_response())])
         batch = spark.read.schema(
             spark.read.parquet(dirs["ingress"]).schema
         ).parquet(dirs["ingress"])
 
-        consumer._handle_batch(batch, batch_id=7)
+        handle(batch, 7)
         once_ok = spark.read.parquet(dirs["processed"]).count()
         once_bad = spark.read.parquet(dirs["quarantine"]).count()
         # the crash-replay: same batch_id delivered again
-        consumer._handle_batch(batch, batch_id=7)
+        handle(batch, 7)
         assert spark.read.parquet(dirs["processed"]).count() == once_ok == 1
         assert spark.read.parquet(dirs["quarantine"]).count() == once_bad == 1
         # a NEW batch id appends
-        consumer._handle_batch(batch, batch_id=8)
+        handle(batch, 8)
         assert spark.read.parquet(dirs["processed"]).count() == 2
 
 
@@ -620,6 +632,92 @@ class TestDimEnrichment:
         assert got[100] == "bronze"  # batch 1 saw the old dim
         assert got[200] == "GOLD"    # batch 2 saw the update
         assert got[201] == "new"     # and the new key
+
+    def test_replayed_batch_does_not_duplicate(self, spark, tmp_path):
+        """A batch replayed after a crash (its commit log entry lost)
+        overwrites its own output instead of appending it again."""
+        import os
+
+        from ex_hivent_spark.streaming.enrich import dim_enriched_stream
+
+        src = str(tmp_path / "src")
+        dim = str(tmp_path / "dim")
+        out = str(tmp_path / "out")
+        ckpt = str(tmp_path / "ckpt")
+        os.makedirs(src)
+        spark.createDataFrame([(0, "bronze")], ["k", "segment"]).write.parquet(dim)
+        spark.createDataFrame(
+            [(100, 0), (101, 0)], ["id", "k"]
+        ).write.mode("append").json(src)
+
+        def run():
+            q = dim_enriched_stream(
+                spark,
+                spark.readStream.schema("id LONG, k LONG").json(src),
+                dim,
+                "k",
+                out,
+                ckpt,
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+                q.awaitTermination(30)
+
+        run()
+        assert spark.read.parquet(out).count() == 2
+        # crash after the sink write, before the batch's commit: the
+        # restarted query replays batch 0
+        last = max(int(n) for n in os.listdir(f"{ckpt}/commits") if n.isdigit())
+        os.remove(f"{ckpt}/commits/{last}")
+        os.remove(f"{ckpt}/commits/.{last}.crc")
+        run()
+        assert spark.read.parquet(out).count() == 2
+
+
+def test_run_with_restarts_bounded_linear_backoff(monkeypatch):
+    """Bounded reconnect (emitter.ex:113-139) with a fake query factory:
+    a failed start or a failed run is retried after b, then 2b; after
+    ``max_tries`` failed starts the last error is re-raised."""
+    from ex_hivent_spark.streaming.consumer import run_with_restarts
+
+    class FakeQuery:
+        def __init__(self, error):
+            self.error = error
+
+        def awaitTermination(self):
+            if self.error is not None:
+                raise self.error
+
+    def factory(outcomes):
+        """Plays ``outcomes`` in order: "start" fails to start, "run"
+        fails while running, "ok" terminates cleanly."""
+        starts = []
+
+        def start_query():
+            outcome = outcomes[len(starts)]
+            starts.append(outcome)
+            if outcome == "start":
+                raise ConnectionError("cannot start")
+            return FakeQuery(RuntimeError("run failed") if outcome == "run" else None)
+
+        return start_query, starts
+
+    sleeps = []
+    monkeypatch.setattr("time.sleep", sleeps.append)
+
+    start_query, starts = factory(["start", "run", "ok"])
+    query = run_with_restarts(start_query, max_tries=3, backoff_s=0.5)
+    assert query.error is None and len(starts) == 3
+    assert sleeps == [0.5, 1.0]
+
+    sleeps.clear()
+    start_query, starts = factory(["run"] * 5)
+    with pytest.raises(RuntimeError, match="run failed"):
+        run_with_restarts(start_query, max_tries=3, backoff_s=0.5)
+    assert len(starts) == 3  # no extra attempt (the reference's `<=`)
+    assert sleeps == [0.5, 1.0]
 
 
 class TestMultiplexRoute:
