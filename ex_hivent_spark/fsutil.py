@@ -56,14 +56,19 @@ def staging_path(target: str) -> str:
     return f"{target}__staging"
 
 
-def write_text_file(spark: SparkSession, path: str, text: str) -> None:
-    """Write a small text file through the Hadoop FS (works on any HCFS)."""
+def write_file(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write a small file through the Hadoop FS (works on any HCFS)."""
     fs, Path = hadoop_fs(spark)
     out = fs.create(Path(path), True)
     try:
-        out.write(bytearray(text, "utf-8"))
+        out.write(bytearray(data))
     finally:
         out.close()
+
+
+def write_text_file(spark: SparkSession, path: str, text: str) -> None:
+    """Write a small UTF-8 text file through the Hadoop FS."""
+    write_file(spark, path, text.encode("utf-8"))
 
 
 def read_text_file(spark: SparkSession, path: str) -> str:

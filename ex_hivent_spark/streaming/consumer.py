@@ -15,18 +15,24 @@ Reference lifecycle (lib/hivent/consumer.ex):
 - consumer identity: ``service`` is the consumer group → one streaming
   query + checkpoint dir per service; queue name = ``service:partition``
   (the (service, partition) claim of the Redis backend).
+- dispatch: one query serves every subscription; each micro-batch is
+  one ok write and one quarantine write, each published onto every
+  subscription's own sink by rename (``sinks.write_batches``).
 - delivery: the reference is at-least-once with no success ack
-  (consumer.ex:75-77); checkpointed ``foreachBatch`` upgrades sink writes
-  to effectively-once — documented deviation (SURVEY.md §3.2).
+  (consumer.ex:75-77); checkpointed ``foreachBatch`` with batch-keyed
+  sinks upgrades sink writes to effectively-once — documented deviation
+  (SURVEY.md §3.2).
 - restart: bounded reconnect attempts with linearly growing backoff
   (consumer.ex:110-127, emitter.ex:113-139) → ``run_with_restarts``.
 
 Processing supports two callback shapes:
 - an *expression* (Column → error-message-or-null): the fast path, stays
-  in codegen — use whenever the check is expressible;
+  in codegen — use whenever the check is expressible. It is evaluated
+  in each of the two writes, so it must be deterministic;
 - a *Python callable* ``(event_dict) -> None | str``: the literal
   ``process/1`` semantics, applied via a UDF (the slow path, as in the
-  reference where every event crosses into user code).
+  reference where every event crosses into user code). The batch is
+  materialized once, so the callable sees each event exactly once.
 """
 
 from __future__ import annotations
@@ -41,7 +47,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ex_hivent_spark.envelope import DEFAULT_PARTITION_COUNT, EVENT_SCHEMA
-from ex_hivent_spark.sources.sinks import write_batch
+from ex_hivent_spark.sources.sinks import write_batches
 
 INGRESS_SCHEMA = T.StructType(
     [*EVENT_SCHEMA.fields, T.StructField("partition_id", T.IntegerType())]
@@ -70,7 +76,12 @@ class Subscription:
     the key hash, so ``partition_count`` does not shuffle an expression
     subscription. For a Python-callable ``process`` it is the number of
     tasks the callback runs in: the batch is repartitioned by
-    ``meta.key`` first, so each key's events stay in one task."""
+    ``meta.key`` first, so each key's events stay in one task.
+
+    A callable runs once per event: route() materializes the batch
+    before writing it. A ``process`` expression is not materialized; it
+    is evaluated once per write, so it must give the same answer each
+    time it is evaluated on a row (no ``rand()``, no clock)."""
 
     service: str
     topic: str
@@ -121,26 +132,32 @@ def _error_column(subscriptions: list[Subscription]) -> Column:
 
 
 def _batch_handler(
-    subscriptions: list[Subscription],
+    subscriptions: list[Subscription], staging_dir: str
 ) -> Callable[[DataFrame, int], None]:
-    """The foreachBatch body: one pass over the micro-batch for every
-    subscription.
+    """The foreachBatch body: two writes per micro-batch, whatever the
+    number of subscriptions.
 
     Each row is exploded to the subscriptions whose topic it matches
-    (unclaimed topics drop out), ``error`` and ``queue`` are computed
-    once over that tagged frame, and the frame is materialized ONCE
-    (localCheckpoint) so a non-deterministic or stateful process
-    callback cannot see a row twice across the writes. When any
-    subscription has a Python callable the batch is first repartitioned
-    by ``meta.key``: one emit is one ingress file, read as one task, and
-    a costly callback would otherwise run serially in it. Each
-    subscription's ok and quarantine sinks are then written from it,
-    serially in the foreachBatch thread — so every job runs under the
-    query's job group and a ``stop()`` reaches it. Every write, empty
-    outcomes included, goes through ``sinks.write_batch``: a replayed
-    batch overwrites its own directories instead of appending
-    duplicates, which upgrades the source's at-least-once delivery to
-    effectively-once sink contents, per subscription."""
+    (unclaimed topics drop out) and tagged with its subscription's
+    index, ``queue`` and ``error``. The ok rows are then written in one
+    write and the quarantined rows in another, each partitioned by the
+    tag, and ``sinks.write_batches`` publishes every subscription's
+    slice onto its own ``processed_dir`` or ``quarantine_dir`` by
+    rename. Two writes, not one, because the two outcomes have different
+    columns. Both run serially in the foreachBatch thread, so every job
+    runs under the query's job group and a ``stop()`` reaches it.
+
+    An expression ``process`` is evaluated once per write; a row lands
+    in one outcome because an expression gives the same answer each
+    time. When any subscription has a Python callable the tagged batch
+    is instead materialized once (``localCheckpoint``), so a callable
+    sees each row exactly once. It is first repartitioned by
+    ``meta.key``: one emit is one ingress file, read as one task, and a
+    costly callback would otherwise run serially in it.
+
+    A replayed batch publishes its directories again instead of
+    appending duplicates, which upgrades the source's at-least-once
+    delivery to effectively-once sink contents, per subscription."""
     tags = F.array(
         *[
             F.when(F.col("name") == F.lit(s.topic), F.lit(i))
@@ -158,24 +175,24 @@ def _batch_handler(
         (s.partition_count for s in subscriptions if not isinstance(s.process, Column)),
         default=0,
     )
+    ok_dirs = [s.processed_dir for s in subscriptions]
+    bad_dirs = [s.quarantine_dir for s in subscriptions]
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         if udf_tasks:
             batch = batch.repartition(udf_tasks, "meta.key")
-        evaluated = (
+        tagged = (
             batch.withColumn(_SUB, F.explode(F.filter(tags, lambda t: t.isNotNull())))
-            .withColumn("error", error)
             .withColumn("queue", queue)
-            .localCheckpoint(eager=True)
+            .withColumn("error", error)
         )
-        for i, sub in enumerate(subscriptions):
-            mine = evaluated.filter(F.col(_SUB) == F.lit(i)).drop(_SUB)
-            ok = mine.filter(F.col("error").isNull()).drop("error")
-            bad = mine.filter(F.col("error").isNotNull()).withColumn(
-                "quarantined_at", F.current_timestamp()
-            )
-            write_batch(ok, sub.processed_dir, batch_id)
-            write_batch(bad, sub.quarantine_dir, batch_id)
+        if udf_tasks:
+            tagged = tagged.localCheckpoint(eager=True)
+        ok = tagged.filter(F.col("error").isNull()).drop("error")
+        bad = tagged.filter(F.col("error").isNotNull()).withColumn(
+            "quarantined_at", F.current_timestamp()
+        )
+        write_batches([(ok, ok_dirs), (bad, bad_dirs)], _SUB, staging_dir, batch_id)
 
     return handle
 
@@ -192,18 +209,22 @@ def route(
     each with its own matcher + callback), where N separate queries
     would re-read the source N times.
 
-    Per micro-batch (one ingress file, ``maxFilesPerTrigger=1``): one
-    materialization of the tagged batch, then an ok and a quarantine
-    write per subscription — 1 + 2N jobs (see ``_batch_handler``). All
-    subscriptions advance on the shared checkpoint: one source offset
-    log, N logical consumers, per-topic quarantine isolation. The query
-    triggers every ``ROUTE_TRIGGER`` instead of polling the ingress
-    directory continuously."""
+    Per micro-batch (one ingress file, ``maxFilesPerTrigger=1``): an ok
+    write and a quarantine write for all subscriptions together, staged
+    under ``<checkpoint_dir>/staging`` and published to each
+    subscription's sinks by rename (see ``_batch_handler``). With a
+    Python-callable subscription, a materialization of the tagged batch
+    comes first. All subscriptions advance on the shared checkpoint:
+    one source offset log, N logical consumers, per-topic quarantine
+    isolation. The query triggers every ``ROUTE_TRIGGER`` instead of
+    polling the ingress directory continuously."""
     return (
         spark.readStream.schema(INGRESS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
-        .writeStream.foreachBatch(_batch_handler(subscriptions))
+        .writeStream.foreachBatch(
+            _batch_handler(subscriptions, f"{checkpoint_dir}/staging")
+        )
         .trigger(processingTime=ROUTE_TRIGGER)
         .option("checkpointLocation", checkpoint_dir)
         .start()

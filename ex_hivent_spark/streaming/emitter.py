@@ -80,7 +80,6 @@ class StreamEmitter:
     ) -> DataFrame:
         """Single-event convenience emit (validates version like
         emitter.ex:64); returns the enriched ack row(s)."""
-        validate_version(version)
         return self.emit_batch(
             [
                 {
@@ -95,13 +94,15 @@ class StreamEmitter:
 
     def emit_batch(self, events: Sequence[Mapping[str, Any]]) -> DataFrame:
         """Batch emit: enrich + append one file to the ingress dir; the
-        returned DataFrame is the ack and equals the stored rows."""
+        returned DataFrame is the ack and equals the stored rows. Every
+        version is validated before anything is written, and an empty
+        batch writes nothing and returns an empty ack."""
         created_at = datetime.now(timezone.utc)
         table = pa.Table.from_pydict(
             {
                 "name": [e["name"] for e in events],
                 "payload": [e["payload"] for e in events],
-                "version": [int(e["version"]) for e in events],
+                "version": [validate_version(e["version"]) for e in events],
                 "cid": [_or_uuid(e.get("cid")) for e in events],
                 "uuid": [str(uuid.uuid4()) for _ in events],
                 "key": [e.get("key") for e in events],
@@ -116,5 +117,6 @@ class StreamEmitter:
             self.producer,
             self.partition_count,
         )
-        enriched.write.mode("append").parquet(self.ingress_dir)
+        if events:
+            enriched.write.mode("append").parquet(self.ingress_dir)
         return enriched

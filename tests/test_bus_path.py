@@ -1,7 +1,8 @@
 """The bus path, emit → route() → ok/quarantine sinks, at the level of
 what each step stores and which Spark jobs it runs: one ingress file per
 emit, an ack equal to the stored rows, Python callables that see only
-their own topic, and route() jobs attributed to the query's job group.
+their own topic, route() jobs attributed to the query's job group, the
+columns each published sink holds, and a stop() that ends a slow batch.
 """
 
 from __future__ import annotations
@@ -12,6 +13,7 @@ import math
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from ex_hivent_spark.streaming.consumer import INGRESS_SCHEMA, Subscription, route
@@ -79,6 +81,26 @@ class TestEmitter:
         assert len({m[6] for m in metas}) == 1  # one created_at per emit
         assert abs(metas[0][6].timestamp() - time.time()) < 60
         assert all(m[2] == "svc" for m in metas)
+
+    @pytest.mark.parametrize("version", [1.9, True, "2"])
+    def test_batch_rejects_a_non_integer_version(self, spark, tmp_path, version):
+        """``emit_batch`` applies ``emit``'s version guard (emitter.ex:64)
+        to every event before anything is written."""
+        ingress = str(tmp_path / "ingress")
+        em = StreamEmitter(spark, ingress, producer="svc")
+        events = _events("topic:a", 3)
+        events[2]["version"] = version
+        with pytest.raises(TypeError):
+            em.emit_batch(events)
+        assert _ingress_files(ingress) == []
+
+    def test_empty_emit_writes_nothing(self, spark, tmp_path):
+        ingress = str(tmp_path / "ingress")
+        em = StreamEmitter(spark, ingress, producer="svc")
+        em.emit_batch(_events("topic:a", 4))
+        ack = em.emit_batch([])
+        assert len(_ingress_files(ingress)) == 1
+        assert ack.count() == 0
 
 
 def _recording_process(log_dir: str):
@@ -230,10 +252,187 @@ class TestRoute:
         # no job was added to the default group (set difference, so the
         # status store evicting old finished jobs cannot fail the check)
         assert set(tracker.getJobIdsForGroup(None)) - default_before == set()
-        # one materialization + an ok and a quarantine write per
-        # subscription, per batch, all under the query's run id
+        # per batch, all under the query's run id: the shuffle-map job
+        # adaptive execution submits for the meta.key repartition, the
+        # materialization (localCheckpoint), the ok and the quarantine write
         group = tracker.getJobIdsForGroup(str(q.runId))
-        assert len(group) >= len(batches) * (1 + 2 * len(subs))
+        assert len(group) == len(batches) * 4
+
+    def test_expression_route_runs_two_jobs_per_batch(self, spark, tmp_path):
+        """Without a Python callable nothing is materialized: a batch is
+        one ok write and one quarantine write, whatever the number of
+        subscriptions."""
+        ingress = str(tmp_path / "ingress")
+        em = StreamEmitter(spark, ingress, producer="svc")
+        for start in (0, 50):
+            em.emit_batch(
+                [e for t in "abc" for e in _events(f"topic:{t}", 10, start, bad_every=5)]
+            )
+        subs = _expression_subs(tmp_path, "abc")
+        q = route(spark, ingress, subs, str(tmp_path / "chk"))
+        _drain(q)
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert len(batches) == 2
+        group = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+        assert len(group) == len(batches) * 2
+
+
+def _expression_subs(tmp_path, topics: str) -> list[Subscription]:
+    """One expression subscription per topic letter; an event whose
+    payload says ``"response": "error"`` is quarantined."""
+    check = F.when(
+        F.get_json_object("payload", "$.response") == "error", F.lit("rejected")
+    )
+    return [
+        Subscription(
+            service=f"svc_{t}",
+            topic=f"topic:{t}",
+            process=check,
+            processed_dir=str(tmp_path / f"{t}_ok"),
+            quarantine_dir=str(tmp_path / f"{t}_bad"),
+        )
+        for t in topics
+    ]
+
+
+def _payload_vs(df) -> list[int]:
+    return sorted(json.loads(r.payload)["v"] for r in df.select("payload").collect())
+
+
+OK_COLUMNS = ["name", "payload", "meta", "partition_id", "queue", "batch_id"]
+BAD_COLUMNS = OK_COLUMNS[:-1] + ["error", "quarantined_at", "batch_id"]
+
+
+class TestPublish:
+    """route() stages each outcome's write under the checkpoint and
+    publishes one directory per subscription and batch by rename."""
+
+    def test_sink_columns_and_empty_outcomes(self, spark, tmp_path):
+        ingress = str(tmp_path / "ingress")
+        em = StreamEmitter(spark, ingress, producer="svc")
+        em.emit_batch(_events("topic:a", 10, bad_every=4) + _events("topic:b", 6, 20))
+        em.emit_batch(_events("topic:a", 5, 40))
+        chk = tmp_path / "chk"
+        _drain(route(spark, ingress, _expression_subs(tmp_path, "ab"), str(chk)))
+
+        a_ok = spark.read.parquet(str(tmp_path / "a_ok"))
+        a_bad = spark.read.parquet(str(tmp_path / "a_bad"))
+        assert a_ok.columns == OK_COLUMNS
+        assert a_bad.columns == BAD_COLUMNS
+        assert _payload_vs(a_ok) == [1, 2, 3, 5, 6, 7, 9, 40, 41, 42, 43, 44]
+        assert _payload_vs(a_bad) == [0, 4, 8]
+        assert {r.error for r in a_bad.collect()} == {"rejected"}
+        # svc_b never quarantined a row and had no row in the second
+        # batch: every batch still has a directory, with its schema
+        for sink, columns, vs in (("b_ok", OK_COLUMNS, list(range(20, 26))),
+                                  ("b_bad", BAD_COLUMNS, [])):
+            assert sorted(os.listdir(tmp_path / sink)) == ["batch_id=0", "batch_id=1"]
+            df = spark.read.parquet(str(tmp_path / sink))
+            assert df.columns == columns, sink
+            assert _payload_vs(df) == vs, sink
+        b_bad = spark.read.parquet(str(tmp_path / "b_bad"))
+        assert b_bad.schema == a_bad.schema
+        # nothing staged is left behind
+        assert not (chk / "staging").exists() or not os.listdir(chk / "staging")
+
+    def test_leftover_staging_does_not_leak_on_restart(self, spark, tmp_path):
+        """A crash after batch 1 was staged and published, before its
+        commit: the batch replays on restart. A staged ``_sub=0``
+        directory the crash left behind, with a row no event made, must
+        reach no sink, and every event lands once."""
+        ingress = str(tmp_path / "ingress")
+        em = StreamEmitter(spark, ingress, producer="svc")
+        em.emit_batch(_events("topic:a", 8, bad_every=4) + _events("topic:b", 4, 20))
+        em.emit_batch(_events("topic:a", 6, 40, bad_every=3))
+        chk = tmp_path / "chk"
+        subs = _expression_subs(tmp_path, "ab")
+        _drain(route(spark, ingress, subs, str(chk)))
+
+        for name in ("1", ".1.crc"):
+            (chk / "commits" / name).unlink(missing_ok=True)
+        stray = spark.read.parquet(str(tmp_path / "a_ok")).drop("batch_id").limit(1)
+        stray = stray.withColumn("payload", F.lit(json.dumps({"v": 999, "response": "ok"})))
+        for outcome in ("0", "1"):
+            frame = stray if outcome == "0" else stray.withColumn(
+                "error", F.lit("stray")).withColumn("quarantined_at", F.current_timestamp())
+            frame.write.parquet(str(chk / "staging" / outcome / "_sub=0"))
+
+        q = route(spark, ingress, subs, str(chk))
+        _drain(q)
+        assert [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0] == [1]
+        want = {
+            "a_ok": [1, 2, 3, 5, 6, 7, 40, 41, 43, 44],
+            "a_bad": [0, 4, 42, 45],
+            "b_ok": [20, 21, 22, 23],
+            "b_bad": [],
+        }
+        for sink, vs in want.items():
+            assert _payload_vs(spark.read.parquet(str(tmp_path / sink))) == vs, sink
+        assert not (chk / "staging").exists() or not os.listdir(chk / "staging")
+
+
+def _slow_process(log_dir: str, flag: str):
+    """A callable that logs each event's uuid and, while ``flag``
+    exists, sleeps 2.5 s per event; ``"response": "error"`` payloads
+    are rejected."""
+
+    def process(event) -> "None | str":
+        import json as _json
+        import os as _os
+        import time as _time
+
+        with open(_os.path.join(log_dir, f"{_os.getpid()}.log"), "a") as f:
+            f.write(event["uuid"] + "\n")
+        if _os.path.exists(flag):
+            _time.sleep(2.5)
+        if _json.loads(event["payload"])["response"] == "error":
+            return "rejected"
+        return None
+
+    return process
+
+
+def test_stop_ends_a_slow_batch_and_restart_lands_each_event_once(spark, tmp_path):
+    """A batch of 30 events through a callable that sleeps 2.5 s per
+    event runs in one task for 75 s. ``stop()`` cancels it well before
+    that, nothing is published, and a restart on the same checkpoint
+    lands each event once, in the sink its outcome selects."""
+    ingress = str(tmp_path / "ingress")
+    StreamEmitter(spark, ingress, producer="svc").emit_batch(
+        _events("topic:a", 30, bad_every=3)
+    )
+    log_dir, flag = tmp_path / "log", tmp_path / "slow"
+    log_dir.mkdir()
+    flag.write_text("")
+    sub = Subscription(
+        service="svc_a",
+        topic="topic:a",
+        process=_slow_process(str(log_dir), str(flag)),
+        processed_dir=str(tmp_path / "a_ok"),
+        quarantine_dir=str(tmp_path / "a_bad"),
+        partition_count=1,
+    )
+    chk = str(tmp_path / "chk")
+    q = route(spark, ingress, [sub], chk)
+    deadline = time.time() + 60
+    while not _seen(str(log_dir)):
+        assert time.time() < deadline and q.isActive, "the batch never started"
+        time.sleep(0.2)
+    t0 = time.time()
+    q.stop()
+    assert time.time() - t0 < 30
+    q.awaitTermination(30)
+    assert not q.isActive
+    assert len(_seen(str(log_dir))) < 30  # the batch did not run to its end
+    assert not (tmp_path / "a_ok").exists() and not (tmp_path / "a_bad").exists()
+
+    flag.unlink()
+    _drain(route(spark, ingress, [sub], chk))
+    ok = spark.read.parquet(str(tmp_path / "a_ok"))
+    bad = spark.read.parquet(str(tmp_path / "a_bad"))
+    assert _payload_vs(ok) == [v for v in range(30) if v % 3]
+    assert _payload_vs(bad) == list(range(0, 30, 3))
+    assert ok.select("meta.uuid").distinct().count() == 20
 
 
 def test_ewma_input_value_has_no_nulls(spark, sf_dir):

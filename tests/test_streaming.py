@@ -440,7 +440,10 @@ class TestConsumerIdempotency:
         em.emit("some:event", {"response": "ok"}, version=1, key="k1")
         em.emit("some:event", {"response": "error"}, version=1, key="k2")
 
-        handle = _batch_handler([make_subscription(dirs, make_process_response())])
+        handle = _batch_handler(
+            [make_subscription(dirs, make_process_response())],
+            f"{dirs['checkpoint']}/staging",
+        )
         batch = spark.read.schema(
             spark.read.parquet(dirs["ingress"]).schema
         ).parquet(dirs["ingress"])
@@ -807,12 +810,13 @@ class TestMultiplexRoute:
     def test_sink_failure_midbatch_restart_exactly_once_all_subs(
         self, spark, tmp_path
     ):
-        """Failure injection on the shared-checkpoint multiplex: sub 2
-        of 3's ok-sink write fails MID-BATCH (after sub 1 already wrote
-        its slice, before sub 3 ran). The batch must not commit; on
-        restart the replayed batch overwrites EVERY subscription's
-        batch_id directory — sub 1's pre-failure rows don't duplicate,
-        sub 3's never-written slice appears, and sub 2 lands once."""
+        """Failure injection on the shared-checkpoint multiplex: the
+        publish of sub 2 of 3's ok slice fails MID-BATCH (after sub 1's
+        slice was already published, before sub 3's). The batch must
+        not commit; on restart the replayed batch republishes EVERY
+        subscription's batch_id directory — sub 1's pre-failure rows
+        don't duplicate, sub 3's never-published slice appears, and
+        sub 2 lands once."""
         import os
 
         from ex_hivent_spark.streaming.consumer import Subscription, route
@@ -840,8 +844,8 @@ class TestMultiplexRoute:
                     partition_count=2,
                 )
             )
-        # inject: svc_b's ok sink path is a plain FILE, so the parquet
-        # write of its slice throws inside the shared foreachBatch
+        # inject: svc_b's ok sink path is a plain FILE, so publishing
+        # its slice throws inside the shared foreachBatch
         with open(sink_dirs["svc_b"], "w") as f:
             f.write("not a directory")
 
