@@ -56,6 +56,12 @@ EVENT_SCHEMA = T.StructType(
     ]
 )
 
+# The stored form of an emitted event: the envelope plus the partition
+# id the emitter derived from its key.
+INGRESS_SCHEMA = T.StructType(
+    [*EVENT_SCHEMA.fields, T.StructField("partition_id", T.IntegerType())]
+)
+
 
 def validate_version(version: Any) -> int:
     """emit/3 guard: version must be an integer (emitter.ex:64)."""

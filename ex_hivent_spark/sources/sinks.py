@@ -6,8 +6,8 @@ replays a batch after a crash (at-least-once), and the batch-keyed
 replace swaps the replay's own output in instead of appending a second
 copy. A replayable source plus this idempotent sink gives exactly-once
 sink contents, per batch and per sink. ``write_batch`` fills one sink
-with one write; ``write_batches`` fills many sinks from one write per
-frame, staged and then published onto each sink by rename.
+with one write; ``write_batches`` fills many sinks from one write,
+staged and then published onto each sink by rename.
 """
 
 from __future__ import annotations
@@ -32,41 +32,40 @@ def write_batch(df: DataFrame, sink_dir: str, batch_id: int) -> None:
 
 
 def write_batches(
-    outcomes: Sequence[tuple[DataFrame, Sequence[str]]],
+    frame: DataFrame,
+    sinks: Sequence[str],
     sink_col: str,
     staging_dir: str,
     batch_id: int,
 ) -> None:
-    """Write micro-batch ``batch_id`` to many sinks, one Spark write per
-    frame. Each ``(frame, sinks)`` pair carries an integer ``sink_col``,
-    the index of a row's sink in ``sinks``.
+    """Write micro-batch ``batch_id`` to many sinks in one Spark write.
+    ``frame`` carries an integer ``sink_col``, the index of a row's sink
+    in ``sinks``.
 
-    Every frame is written once, ``partitionBy(sink_col)``, under a
-    fresh ``staging_dir``. Each staged ``<sink_col>=i`` directory is
-    then published onto ``<sinks[i]>/batch_id=<N>`` with Hadoop FS
-    calls: delete the target, create its parent, rename. A sink with no
-    rows gets a schema-only file written on the driver, so every sink
-    holds every batch, as with ``write_batch``. A publish that fails
-    raises, so the batch does not commit; its replay stages and
-    publishes the whole batch again, replacing whatever a crashed
-    attempt left staged or published. The staging directory must be
-    on the sinks' filesystem, where a rename moves a directory."""
-    spark = outcomes[0][0].sparkSession
+    The frame is written once, ``partitionBy(sink_col)``, under a fresh
+    ``staging_dir``. Each staged ``<sink_col>=i`` directory is then
+    published onto ``<sinks[i]>/batch_id=<N>`` with Hadoop FS calls:
+    delete the target, create its parent, rename. A sink with no rows
+    gets a schema-only file written on the driver, so every sink holds
+    every batch, as with ``write_batch``. A publish that fails raises,
+    so the batch does not commit; its replay stages and publishes the
+    whole batch again, replacing whatever a crashed attempt left staged
+    or published. The staging directory must be on the sinks'
+    filesystem, where a rename moves a directory."""
+    spark = frame.sparkSession
     fs, Path = hadoop_fs(spark)
     fs.delete(Path(staging_dir), True)
-    for k, (frame, _) in enumerate(outcomes):
-        frame.write.partitionBy(sink_col).parquet(f"{staging_dir}/{k}")
-    for k, (frame, sinks) in enumerate(outcomes):
-        schema = None
-        for i, sink in enumerate(sinks):
-            staged = f"{staging_dir}/{k}/{sink_col}={i}"
-            if not fs.exists(Path(staged)):
-                schema = schema or frame.drop(sink_col).schema
-                write_file(spark, f"{staged}/part-00000.parquet", _empty_parquet(schema))
-            target = Path(f"{sink}/batch_id={batch_id}")
-            fs.delete(target, True)
-            if not fs.mkdirs(target.getParent()) or not fs.rename(Path(staged), target):
-                raise IOError(f"could not publish {staged} onto {target}")
+    frame.write.partitionBy(sink_col).parquet(staging_dir)
+    schema = None
+    for i, sink in enumerate(sinks):
+        staged = f"{staging_dir}/{sink_col}={i}"
+        if not fs.exists(Path(staged)):
+            schema = schema or frame.drop(sink_col).schema
+            write_file(spark, f"{staged}/part-00000.parquet", _empty_parquet(schema))
+        target = Path(f"{sink}/batch_id={batch_id}")
+        fs.delete(target, True)
+        if not fs.mkdirs(target.getParent()) or not fs.rename(Path(staged), target):
+            raise IOError(f"could not publish {staged} onto {target}")
     fs.delete(Path(staging_dir), True)
 
 

@@ -15,9 +15,11 @@ Reference lifecycle (lib/hivent/consumer.ex):
 - consumer identity: ``service`` is the consumer group → one streaming
   query + checkpoint dir per service; queue name = ``service:partition``
   (the (service, partition) claim of the Redis backend).
-- dispatch: one query serves every subscription; each micro-batch is
-  one ok write and one quarantine write, each published onto every
-  subscription's own sink by rename (``sinks.write_batches``).
+- dispatch: one query serves every subscription. The tagging (topic
+  match, ``queue``, ``error``, ``quarantined_at``) is part of the
+  stream's plan, and each micro-batch is ONE write, published onto
+  every subscription's ok and quarantine sinks by rename
+  (``sinks.write_batches``).
 - delivery: the reference is at-least-once with no success ack
   (consumer.ex:75-77); checkpointed ``foreachBatch`` with batch-keyed
   sinks upgrades sink writes to effectively-once — documented deviation
@@ -27,12 +29,14 @@ Reference lifecycle (lib/hivent/consumer.ex):
 
 Processing supports two callback shapes:
 - an *expression* (Column → error-message-or-null): the fast path, stays
-  in codegen — use whenever the check is expressible. It is evaluated
-  in each of the two writes, so it must be deterministic;
+  in codegen — use whenever the check is expressible;
 - a *Python callable* ``(event_dict) -> None | str``: the literal
   ``process/1`` semantics, applied via a UDF (the slow path, as in the
-  reference where every event crosses into user code). The batch is
-  materialized once, so the callable sees each event exactly once.
+  reference where every event crosses into user code).
+
+Either is evaluated once per row of the one write, so a callable sees
+each event of a batch once; a replayed batch runs it again, as the
+reference's redelivery would.
 """
 
 from __future__ import annotations
@@ -43,15 +47,10 @@ from typing import Any, Callable, Mapping
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ex_hivent_spark.envelope import DEFAULT_PARTITION_COUNT, EVENT_SCHEMA
+from ex_hivent_spark.envelope import DEFAULT_PARTITION_COUNT, INGRESS_SCHEMA
 from ex_hivent_spark.sources.sinks import write_batches
-
-INGRESS_SCHEMA = T.StructType(
-    [*EVENT_SCHEMA.fields, T.StructField("partition_id", T.IntegerType())]
-)
 
 # route()'s trigger interval. With the default trigger an idle query
 # re-lists the ingress directory every 10 ms: an idle 3-subscription
@@ -59,7 +58,8 @@ INGRESS_SCHEMA = T.StructType(
 # 0.03 CPU-s/s at 250 ms, for at most 250 ms of added latency.
 ROUTE_TRIGGER = "250 milliseconds"
 
-# Column naming the subscription a tagged row belongs to (its index).
+# Column naming the sink a tagged row goes to (its index in route()'s
+# sink list).
 _SUB = "_sub"
 
 ProcessFn = Callable[[Mapping[str, Any]], "None | str"]
@@ -78,10 +78,10 @@ class Subscription:
     tasks the callback runs in: the batch is repartitioned by
     ``meta.key`` first, so each key's events stay in one task.
 
-    A callable runs once per event: route() materializes the batch
-    before writing it. A ``process`` expression is not materialized; it
-    is evaluated once per write, so it must give the same answer each
-    time it is evaluated on a row (no ``rand()``, no clock)."""
+    ``process`` runs once per event of a batch: route() writes each
+    batch once. Ok rows go to ``processed_dir`` and quarantined rows to
+    ``quarantine_dir``; both hold the same columns, with ``error`` and
+    ``quarantined_at`` null on an ok row."""
 
     service: str
     topic: str
@@ -131,33 +131,23 @@ def _error_column(subscriptions: list[Subscription]) -> Column:
     return error
 
 
-def _batch_handler(
-    subscriptions: list[Subscription], staging_dir: str
-) -> Callable[[DataFrame, int], None]:
-    """The foreachBatch body: two writes per micro-batch, whatever the
-    number of subscriptions.
+def _tagged(events: DataFrame, subscriptions: list[Subscription]) -> DataFrame:
+    """Every event tagged for route()'s one write.
 
     Each row is exploded to the subscriptions whose topic it matches
-    (unclaimed topics drop out) and tagged with its subscription's
-    index, ``queue`` and ``error``. The ok rows are then written in one
-    write and the quarantined rows in another, each partitioned by the
-    tag, and ``sinks.write_batches`` publishes every subscription's
-    slice onto its own ``processed_dir`` or ``quarantine_dir`` by
-    rename. Two writes, not one, because the two outcomes have different
-    columns. Both run serially in the foreachBatch thread, so every job
-    runs under the query's job group and a ``stop()`` reaches it.
+    (unclaimed topics drop out) and gets its ``queue``, its ``error``
+    (null when processing succeeded) and ``quarantined_at`` (null for
+    an ok row). ``_sub`` is the index of the row's sink in route()'s
+    sink list: ``i`` for an ok row of subscription ``i`` and ``N + i``
+    for a quarantined one, with ``N`` subscriptions.
 
-    An expression ``process`` is evaluated once per write; a row lands
-    in one outcome because an expression gives the same answer each
-    time. When any subscription has a Python callable the tagged batch
-    is instead materialized once (``localCheckpoint``), so a callable
-    sees each row exactly once. It is first repartitioned by
-    ``meta.key``: one emit is one ingress file, read as one task, and a
-    costly callback would otherwise run serially in it.
-
-    A replayed batch publishes its directories again instead of
-    appending duplicates, which upgrades the source's at-least-once
-    delivery to effectively-once sink contents, per subscription."""
+    When any subscription has a Python callable the events are first
+    repartitioned by ``meta.key``: one emit is one ingress file, read
+    as one task, and a costly callback would otherwise run serially in
+    it. On a stream, ``current_timestamp()`` is the batch time kept in
+    the offset log, so a replayed batch stamps the same
+    ``quarantined_at``."""
+    n = len(subscriptions)
     tags = F.array(
         *[
             F.when(F.col("name") == F.lit(s.topic), F.lit(i))
@@ -170,31 +160,37 @@ def _batch_handler(
         F.element_at(services, F.col(_SUB) + 1),
         F.col("partition_id").cast("string"),
     )
-    error = _error_column(subscriptions)
     udf_tasks = max(
         (s.partition_count for s in subscriptions if not isinstance(s.process, Column)),
         default=0,
     )
-    ok_dirs = [s.processed_dir for s in subscriptions]
-    bad_dirs = [s.quarantine_dir for s in subscriptions]
+    if udf_tasks:
+        events = events.repartition(udf_tasks, "meta.key")
+    failed = F.col("error").isNotNull()
+    return (
+        events.withColumn(_SUB, F.explode(F.filter(tags, lambda t: t.isNotNull())))
+        .withColumn("queue", queue)
+        .withColumn("error", _error_column(subscriptions))
+        .withColumn(_SUB, F.when(failed, F.col(_SUB) + n).otherwise(F.col(_SUB)))
+        .withColumn("quarantined_at", F.when(failed, F.current_timestamp()))
+    )
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        if udf_tasks:
-            batch = batch.repartition(udf_tasks, "meta.key")
-        tagged = (
-            batch.withColumn(_SUB, F.explode(F.filter(tags, lambda t: t.isNotNull())))
-            .withColumn("queue", queue)
-            .withColumn("error", error)
-        )
-        if udf_tasks:
-            tagged = tagged.localCheckpoint(eager=True)
-        ok = tagged.filter(F.col("error").isNull()).drop("error")
-        bad = tagged.filter(F.col("error").isNotNull()).withColumn(
-            "quarantined_at", F.current_timestamp()
-        )
-        write_batches([(ok, ok_dirs), (bad, bad_dirs)], _SUB, staging_dir, batch_id)
 
-    return handle
+def _counts(subscriptions: list[Subscription]) -> list[Column]:
+    """Ok and quarantined rows of a tagged batch, per service, named
+    ``<service>.ok`` and ``<service>.quarantine``."""
+    n = len(subscriptions)
+    subs_of: dict[str, list[int]] = {}
+    for i, s in enumerate(subscriptions):
+        subs_of.setdefault(s.service, []).append(i)
+    counts = []
+    for service, subs in subs_of.items():
+        counts.append(F.count_if(F.col(_SUB).isin(subs)).alias(f"{service}.ok"))
+        counts.append(
+            F.count_if(F.col(_SUB).isin([n + i for i in subs]))
+            .alias(f"{service}.quarantine")
+        )
+    return counts
 
 
 def route(
@@ -209,22 +205,41 @@ def route(
     each with its own matcher + callback), where N separate queries
     would re-read the source N times.
 
-    Per micro-batch (one ingress file, ``maxFilesPerTrigger=1``): an ok
-    write and a quarantine write for all subscriptions together, staged
-    under ``<checkpoint_dir>/staging`` and published to each
-    subscription's sinks by rename (see ``_batch_handler``). With a
-    Python-callable subscription, a materialization of the tagged batch
-    comes first. All subscriptions advance on the shared checkpoint:
-    one source offset log, N logical consumers, per-topic quarantine
-    isolation. The query triggers every ``ROUTE_TRIGGER`` instead of
-    polling the ingress directory continuously."""
-    return (
+    The stream is tagged (see ``_tagged``) and observed as ``route``:
+    each progress report's ``observedMetrics`` holds every service's ok
+    and quarantine counts, taken in the same pass. Per micro-batch (one
+    ingress file, ``maxFilesPerTrigger=1``) the foreachBatch body is
+    one write for all subscriptions together, partitioned by ``_sub``
+    and staged under ``<checkpoint_dir>/staging``; each slice is then
+    published onto its subscription's ``processed_dir`` or
+    ``quarantine_dir`` by rename (``sinks.write_batches``). The write
+    runs in the foreachBatch thread, so every job runs under the
+    query's job group and a ``stop()`` reaches it.
+
+    A replayed batch publishes its directories again instead of
+    appending duplicates, which upgrades the source's at-least-once
+    delivery to effectively-once sink contents, per subscription. All
+    subscriptions advance on the shared checkpoint: one source offset
+    log, N logical consumers, per-topic quarantine isolation. The query
+    triggers every ``ROUTE_TRIGGER`` instead of polling the ingress
+    directory continuously."""
+    sinks = [s.processed_dir for s in subscriptions] + [
+        s.quarantine_dir for s in subscriptions
+    ]
+    staging_dir = f"{checkpoint_dir}/staging"
+
+    def write(batch: DataFrame, batch_id: int) -> None:
+        write_batches(batch, sinks, _SUB, staging_dir, batch_id)
+
+    events = (
         spark.readStream.schema(INGRESS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
-        .writeStream.foreachBatch(
-            _batch_handler(subscriptions, f"{checkpoint_dir}/staging")
-        )
+    )
+    return (
+        _tagged(events, subscriptions)
+        .observe("route", *_counts(subscriptions))
+        .writeStream.foreachBatch(write)
         .trigger(processingTime=ROUTE_TRIGGER)
         .option("checkpointLocation", checkpoint_dir)
         .start()

@@ -10,9 +10,17 @@ is one consumer micro-batch under ``maxFilesPerTrigger=1``.
 
 The returned DataFrame is the ack, and it is exactly the stored rows:
 ``uuid``, the ``cid`` default and ``created_at`` are stamped in Python
-once per emit, so the written frame is deterministic and reading the
-ack re-evaluates to the rows in the file. The write is the emit's
-only Spark job.
+once per emit, so the enriched frame is deterministic and reading the
+ack re-evaluates to the rows in the file.
+
+An emit runs no Spark job. The enriched frame is a projection over a
+local relation (the Arrow table, while it stays under
+``spark.sql.execution.arrow.localRelationThreshold``), so collecting
+its two derived columns, ``meta.key`` and ``partition_id``, is
+evaluated on the driver by Spark's own ``xxhash64``. The file is then
+encoded with pyarrow and written through the Hadoop FileSystem under a
+hidden name, which the file source does not list, and renamed into
+place.
 
 At scale the source directory becomes a Kafka topic / cloud-storage
 prefix — the enrichment projection and partition-key derivation are
@@ -27,13 +35,17 @@ from datetime import datetime, timezone
 from typing import Any, Mapping, Sequence
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ex_hivent_spark.envelope import (
     DEFAULT_PARTITION_COUNT,
+    INGRESS_SCHEMA,
     enrich,
     validate_version,
 )
+from ex_hivent_spark.fsutil import hadoop_fs, write_file
 
 
 # The events of one emit, with their stamps, as an Arrow table.
@@ -48,6 +60,8 @@ _STAMPED_SCHEMA = pa.schema(
         ("created_at", pa.timestamp("us", tz="UTC")),
     ]
 )
+
+_INGRESS_ARROW = to_arrow_schema(INGRESS_SCHEMA)
 
 
 def _or_uuid(cid: str | None) -> str:
@@ -110,13 +124,49 @@ class StreamEmitter:
             },
             schema=_STAMPED_SCHEMA,
         )
-        # An Arrow table becomes one partition per record batch, decoded
-        # in the JVM; coalesce(1) keeps an emit past one batch one file.
         enriched = enrich(
-            self.spark.createDataFrame(table).coalesce(1),
-            self.producer,
-            self.partition_count,
+            self.spark.createDataFrame(table), self.producer, self.partition_count
         )
         if events:
-            enriched.write.mode("append").parquet(self.ingress_dir)
+            derived = enriched.select("meta.key", "partition_id").collect()
+            self._append(self._stored(table, derived))
         return enriched
+
+    def _stored(self, table: pa.Table, derived: list) -> pa.Table:
+        """The stamped events with their derived ``meta.key`` and
+        ``partition_id``, laid out as ``INGRESS_SCHEMA``."""
+        col = {name: table.column(name).combine_chunks() for name in table.column_names}
+        meta = pa.StructArray.from_arrays(
+            [
+                col["name"],
+                col["version"],
+                pa.array([self.producer] * table.num_rows, pa.string()),
+                col["cid"],
+                col["uuid"],
+                pa.array([r.key for r in derived], pa.string()),
+                col["created_at"],
+            ],
+            fields=list(_INGRESS_ARROW.field("meta").type),
+        )
+        return pa.Table.from_arrays(
+            [
+                col["name"],
+                col["payload"],
+                meta,
+                pa.array([r.partition_id for r in derived], pa.int32()),
+            ],
+            schema=_INGRESS_ARROW,
+        )
+
+    def _append(self, table: pa.Table) -> None:
+        """Write ``table`` as one parquet file in the ingress directory:
+        under a hidden ``.<name>.tmp`` first, which the file source does
+        not list, then renamed to ``part-<uuid>.parquet``."""
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf)
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = f"{self.ingress_dir}/.{name}.tmp"
+        write_file(self.spark, tmp, buf.getvalue().to_pybytes())
+        fs, Path = hadoop_fs(self.spark)
+        if not fs.rename(Path(tmp), Path(f"{self.ingress_dir}/{name}")):
+            raise IOError(f"could not publish {tmp} in {self.ingress_dir}")

@@ -37,6 +37,9 @@ PROGRESS_SCHEMA = T.StructType(
         T.StructField("batch_duration_ms", T.LongType()),
         T.StructField("state_rows", T.LongType()),
         T.StructField("watermark", T.StringType()),
+        # StreamingQueryProgress.observedMetrics as JSON: observation
+        # name -> {metric: value}, e.g. route()'s per-service counts
+        T.StructField("observed_metrics", T.StringType()),
     ]
 )
 
@@ -82,6 +85,9 @@ class ProgressMonitor(StreamingQueryListener):
                     s.get("numRowsTotal", 0) for s in state
                 ),
                 "watermark": (p.get("eventTime") or {}).get("watermark"),
+                "observed_metrics": json.dumps(
+                    p.get("observedMetrics") or {}, sort_keys=True
+                ),
             }
         )
         if len(self.records) > self.max_records:

@@ -1,8 +1,9 @@
 """The bus path, emit → route() → ok/quarantine sinks, at the level of
 what each step stores and which Spark jobs it runs: one ingress file per
-emit, an ack equal to the stored rows, Python callables that see only
-their own topic, route() jobs attributed to the query's job group, the
-columns each published sink holds, and a stop() that ends a slow batch.
+emit and no Spark job, an ack equal to the stored rows, Python callables
+that see only their own topic, route() jobs attributed to the query's
+job group, what route() reports per batch, the columns each published
+sink holds, and a stop() that ends a slow batch.
 """
 
 from __future__ import annotations
@@ -94,6 +95,29 @@ class TestEmitter:
             em.emit_batch(events)
         assert _ingress_files(ingress) == []
 
+    def test_emit_runs_no_spark_job(self, spark, tmp_path):
+        """The enriched frame is a projection over a local relation, so
+        its derived columns are collected without a job and the file is
+        written with pyarrow: an emit adds no job to the job group it
+        runs in, nor to the default group."""
+        ingress = str(tmp_path / "ingress")
+        em = StreamEmitter(spark, ingress, producer="svc")
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        default_before = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup("test-emit-runs-no-job", "emit_batch")
+        try:
+            em.emit_batch(_events("topic:a", 200))
+            em.emit_batch(_events("topic:b", 300, start=200))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert tracker.getJobIdsForGroup("test-emit-runs-no-job") == []
+        assert set(tracker.getJobIdsForGroup(None)) - default_before == set()
+        assert len(_ingress_files(ingress)) == 2
+        # nothing hidden is left behind next to the published files
+        assert [n for n in os.listdir(ingress) if n.endswith(".tmp")] == []
+
     def test_empty_emit_writes_nothing(self, spark, tmp_path):
         ingress = str(tmp_path / "ingress")
         em = StreamEmitter(spark, ingress, producer="svc")
@@ -178,7 +202,7 @@ class TestRoute:
             ok = spark.read.parquet(str(tmp_path / f"{t}_ok"))
             bad = spark.read.parquet(str(tmp_path / f"{t}_bad"))
             assert (ok.count(), bad.count()) == (n_ok, n_bad), t
-            assert {r.name for r in ok.union(bad.drop("error", "quarantined_at"))
+            assert {r.name for r in ok.union(bad)
                     .select("name").distinct().collect()} == {f"topic:{t}"}
             assert {r.queue.split(":")[0] for r in bad.collect()} == {f"svc_{t}"}
 
@@ -253,15 +277,15 @@ class TestRoute:
         # status store evicting old finished jobs cannot fail the check)
         assert set(tracker.getJobIdsForGroup(None)) - default_before == set()
         # per batch, all under the query's run id: the shuffle-map job
-        # adaptive execution submits for the meta.key repartition, the
-        # materialization (localCheckpoint), the ok and the quarantine write
+        # adaptive execution submits for the meta.key repartition, and
+        # the one write
         group = tracker.getJobIdsForGroup(str(q.runId))
-        assert len(group) == len(batches) * 4
+        assert len(group) == len(batches) * 2
 
-    def test_expression_route_runs_two_jobs_per_batch(self, spark, tmp_path):
-        """Without a Python callable nothing is materialized: a batch is
-        one ok write and one quarantine write, whatever the number of
-        subscriptions."""
+    def test_expression_route_runs_one_job_per_batch(self, spark, tmp_path):
+        """Without a Python callable nothing is repartitioned: a batch is
+        one write of its ok and quarantined rows together, whatever the
+        number of subscriptions."""
         ingress = str(tmp_path / "ingress")
         em = StreamEmitter(spark, ingress, producer="svc")
         for start in (0, 50):
@@ -274,7 +298,82 @@ class TestRoute:
         batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
         assert len(batches) == 2
         group = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
-        assert len(group) == len(batches) * 2
+        assert len(group) == len(batches) * 1
+
+
+class TestRouteProgress:
+    """What route() reports about each micro-batch: its input rows, the
+    counts it observes, and the quarantine stamp a replay keeps."""
+
+    def test_num_input_rows_counts_each_event_once(self, spark, tmp_path):
+        ingress = str(tmp_path / "ingress")
+        em = StreamEmitter(spark, ingress, producer="svc")
+        em.emit_batch(_events("topic:a", 25, bad_every=4))
+        em.emit_batch(_events("topic:b", 40, 100, bad_every=3))
+        q = route(spark, ingress, _expression_subs(tmp_path, "ab"), str(tmp_path / "chk"))
+        _drain(q)
+        rows = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0]
+        assert sorted(rows) == [25, 40]
+
+    def test_observed_counts_equal_sink_rows(self, spark, tmp_path):
+        from ex_hivent_spark.streaming import monitor
+
+        ingress = str(tmp_path / "ingress")
+        em = StreamEmitter(spark, ingress, producer="svc")
+        em.emit_batch(_events("topic:a", 10, bad_every=4) + _events("topic:b", 6, 20, bad_every=3))
+        em.emit_batch(_events("topic:a", 5, 40, bad_every=2))
+        m = monitor.attach(spark)
+        try:
+            q = route(spark, ingress, _expression_subs(tmp_path, "ab"), str(tmp_path / "chk"))
+            _drain(q)
+            deadline = time.time() + 30
+            while time.time() < deadline and m.total_input_rows() < 21:
+                time.sleep(0.2)
+        finally:
+            monitor.detach(spark, m)
+        observed = {
+            r["batch_id"]: json.loads(r["observed_metrics"])["route"]
+            for r in m.records
+            if r["run_id"] == str(q.runId) and r["num_input_rows"] > 0
+        }
+        assert sorted(observed) == [0, 1]
+        for t in "ab":
+            for outcome, sink in (("ok", f"{t}_ok"), ("quarantine", f"{t}_bad")):
+                df = spark.read.parquet(str(tmp_path / sink))
+                for batch_id, counts in observed.items():
+                    rows = df.filter(F.col("batch_id") == batch_id).count()
+                    assert counts[f"svc_{t}.{outcome}"] == rows, (sink, batch_id)
+        assert sum(c["svc_a.quarantine"] for c in observed.values()) == 6
+        assert "observed_metrics" in m.metrics_df(spark).columns
+
+    def test_replayed_batch_keeps_its_quarantined_at(self, spark, tmp_path):
+        """``quarantined_at`` is the batch time kept in the offset log:
+        a replay of the batch (its commit dropped) stamps the same
+        value instead of the time of the replay."""
+        ingress = str(tmp_path / "ingress")
+        StreamEmitter(spark, ingress, producer="svc").emit_batch(
+            _events("topic:a", 8, bad_every=4)
+        )
+        chk = tmp_path / "chk"
+        subs = _expression_subs(tmp_path, "a")
+        _drain(route(spark, ingress, subs, str(chk)))
+
+        def stamps() -> list:
+            bad = spark.read.parquet(str(tmp_path / "a_bad")).collect()
+            return sorted((json.loads(r.payload)["v"], r.quarantined_at) for r in bad)
+
+        first = stamps()
+        assert [v for v, _ in first] == [0, 4]
+        with open(chk / "offsets" / "0") as f:
+            batch_ms = json.loads(f.read().splitlines()[1])["batchTimestampMs"]
+        assert {round(t.timestamp() * 1000) for _, t in first} == {batch_ms}
+
+        for name in ("0", ".0.crc"):
+            (chk / "commits" / name).unlink(missing_ok=True)
+        q = route(spark, ingress, subs, str(chk))
+        _drain(q)
+        assert [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0] == [0]
+        assert stamps() == first
 
 
 def _expression_subs(tmp_path, topics: str) -> list[Subscription]:
@@ -299,8 +398,9 @@ def _payload_vs(df) -> list[int]:
     return sorted(json.loads(r.payload)["v"] for r in df.select("payload").collect())
 
 
-OK_COLUMNS = ["name", "payload", "meta", "partition_id", "queue", "batch_id"]
-BAD_COLUMNS = OK_COLUMNS[:-1] + ["error", "quarantined_at", "batch_id"]
+BAD_COLUMNS = ["name", "payload", "meta", "partition_id", "queue", "error",
+               "quarantined_at", "batch_id"]
+OK_COLUMNS = BAD_COLUMNS
 
 
 class TestPublish:
@@ -322,6 +422,9 @@ class TestPublish:
         assert _payload_vs(a_ok) == [1, 2, 3, 5, 6, 7, 9, 40, 41, 42, 43, 44]
         assert _payload_vs(a_bad) == [0, 4, 8]
         assert {r.error for r in a_bad.collect()} == {"rejected"}
+        assert all(r.quarantined_at is not None for r in a_bad.collect())
+        # ok rows carry a null error and quarantined_at
+        assert {(r.error, r.quarantined_at) for r in a_ok.collect()} == {(None, None)}
         # svc_b never quarantined a row and had no row in the second
         # batch: every batch still has a directory, with its schema
         for sink, columns, vs in (("b_ok", OK_COLUMNS, list(range(20, 26))),
@@ -337,9 +440,10 @@ class TestPublish:
 
     def test_leftover_staging_does_not_leak_on_restart(self, spark, tmp_path):
         """A crash after batch 1 was staged and published, before its
-        commit: the batch replays on restart. A staged ``_sub=0``
-        directory the crash left behind, with a row no event made, must
-        reach no sink, and every event lands once."""
+        commit: the batch replays on restart. The staged ``_sub=0`` and
+        ``_sub=2`` directories (svc_a's ok and quarantine slices) the
+        crash left behind, each with a row no event made, must reach no
+        sink, and every event lands once."""
         ingress = str(tmp_path / "ingress")
         em = StreamEmitter(spark, ingress, producer="svc")
         em.emit_batch(_events("topic:a", 8, bad_every=4) + _events("topic:b", 4, 20))
@@ -352,10 +456,10 @@ class TestPublish:
             (chk / "commits" / name).unlink(missing_ok=True)
         stray = spark.read.parquet(str(tmp_path / "a_ok")).drop("batch_id").limit(1)
         stray = stray.withColumn("payload", F.lit(json.dumps({"v": 999, "response": "ok"})))
-        for outcome in ("0", "1"):
-            frame = stray if outcome == "0" else stray.withColumn(
+        for sub in ("0", "2"):
+            frame = stray if sub == "0" else stray.withColumn(
                 "error", F.lit("stray")).withColumn("quarantined_at", F.current_timestamp())
-            frame.write.parquet(str(chk / "staging" / outcome / "_sub=0"))
+            frame.write.parquet(str(chk / "staging" / f"_sub={sub}"))
 
         q = route(spark, ingress, subs, str(chk))
         _drain(q)

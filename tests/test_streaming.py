@@ -12,7 +12,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from ex_hivent_spark.streaming.consumer import Subscription, _batch_handler, route
+from ex_hivent_spark.streaming.consumer import Subscription, _tagged, route
 from ex_hivent_spark.streaming.emitter import StreamEmitter
 from ex_hivent_spark.streaming.windows import (
     dedup_within_watermark,
@@ -440,13 +440,20 @@ class TestConsumerIdempotency:
         em.emit("some:event", {"response": "ok"}, version=1, key="k1")
         em.emit("some:event", {"response": "error"}, version=1, key="k2")
 
-        handle = _batch_handler(
+        from ex_hivent_spark.sources.sinks import write_batches
+
+        batch = _tagged(
+            spark.read.schema(
+                spark.read.parquet(dirs["ingress"]).schema
+            ).parquet(dirs["ingress"]),
             [make_subscription(dirs, make_process_response())],
-            f"{dirs['checkpoint']}/staging",
         )
-        batch = spark.read.schema(
-            spark.read.parquet(dirs["ingress"]).schema
-        ).parquet(dirs["ingress"])
+
+        def handle(df, batch_id):
+            write_batches(
+                df, [dirs["processed"], dirs["quarantine"]], "_sub",
+                f"{dirs['checkpoint']}/staging", batch_id,
+            )
 
         handle(batch, 7)
         once_ok = spark.read.parquet(dirs["processed"]).count()
