@@ -263,8 +263,9 @@ def main() -> None:
         out["errors"] = errors
 
     # Robustness against tail-only output capture: the driver records
-    # only the LAST 2000 characters of stdout (BENCH_r05.json's tail
-    # field), and with 100 headline queries the full one-line JSON is
+    # only the LAST 2000 characters of stdout (the tail field of
+    # the r5 bench record, commit 36777d6), and with 100 headline
+    # queries the full one-line JSON is
     # ~3 KB — r5's record lost its parsed object to exactly that.
     # So: (1) per-query times stream out first, one short line each,
     # (2) the FULL record goes to FULL_RECORD next to this script

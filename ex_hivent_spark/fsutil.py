@@ -1,5 +1,6 @@
-"""Crash-safe directory publish (staging swap) shared by the parquet
-view maintainers (streaming/upsert.py, maintenance.py).
+"""Crash-safe directory publish (staging swap) for the parquet tables
+that maintenance.py rewrites in place (compaction, the incremental
+rollup, keyed delete and MERGE).
 
 Protocol — writer side (:func:`publish_swap`):
 
@@ -17,16 +18,16 @@ state deterministically before the caller looks at ``target``:
 * no target, staging is COMMIT_READY → crash landed between steps 4
   and 5 **roll forward** (the staged data is complete by construction).
   A ready staging alongside a live target (crash before step 4) is
-  discarded instead — the producing batch was never committed, so the
-  caller's retry will regenerate it from the restored target.
+  discarded instead — the producing rewrite was never committed, so
+  the caller's retry will regenerate it from the restored target.
 * no target, backup exists → crash before staging was ready —
   **roll back** by restoring the backup.
-* none of the above → genuinely no published view yet.
+* none of the above → genuinely no published table yet.
 
 Returns whether ``target`` exists afterwards, which is the caller's
-"is this the first batch?" signal — replacing the blanket
-``except Exception: assume-first-batch`` pattern that silently reset a
-view when a read failed for any other reason (permissions, half swap,
+"is this the first write?" signal — replacing the blanket
+``except Exception: assume-first-write`` pattern that silently reset a
+table when a read failed for any other reason (permissions, half swap,
 corrupted footer).
 
 All paths go through the Hadoop FileSystem API, so the same code runs

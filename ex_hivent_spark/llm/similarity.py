@@ -294,7 +294,7 @@ def exact_scores(
     dot) triples come back — never per-pair vector copies. Replaces the
     r13 broadcast-join + per-pair dot() form whose Arrow transfer
     carried BOTH 64-dim vectors for every pair (the dominant cost in
-    ANCHOR_r14's first cut).
+    first r14 anchor, commit 4e1963e).
 
     Each dot is the sequential IEEE fold (:func:`_seq_fold_sum`), so
     values stay bit-identical to ``dot(qu, u)`` and to the oracles'

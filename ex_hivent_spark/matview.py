@@ -101,15 +101,17 @@ def fold_state(
     own shape (``n_rows`` + ``sum_<col>`` [+ ``min_/max_<col>``], as
     :func:`_aggregate` builds it), so one batch's aggregate IS its
     delta: one full-outer join on the group key, coalesced group-wise
-    addition, zero-count groups dropped. Shared by the batch refresh
-    and the streaming continuous view — both maintenance paths MUST
-    fold identically or their states would diverge from a recompute.
+    addition, zero-count groups dropped. The batch refresh folds its
+    change feed with it; the streaming continuous view, whose state
+    Spark's own aggregation keeps, uses it only to merge a head left by
+    another query into a new query's output.
 
     Min/max fold monotonically (least/greatest, nulls skipped) — sound
     for ASSERTIONS only. A retraction can delete the reigning extreme,
     which no fold can recover; the batch refresh repairs
     retraction-touched groups with a pruned recompute afterwards
-    (see refresh), and the append-only streaming path never retracts."""
+    (see refresh). Two aggregates of disjoint append-only streams
+    merge exactly."""
     s, d = state.alias("s"), deltas.alias("d")
     out_cols = [
         (

@@ -58,8 +58,9 @@ def register(name: str, oracle: Optional[str] = None):
 
 
 # The external driver's correctness harness checks the FIRST 50 entries
-# of queries() each round (CORRECTNESS_r01-r10 all cut off at exactly
-# 50, in dict order), so rounds ROTATE which 50 lead. State after r10:
+# of queries() each round (the round 1-10 correctness records, commits
+# 4e6a42a..414639e, all cut off at exactly 50, in dict order), so
+# rounds ROTATE which 50 lead. State after r10:
 # the r10 check was 50/50 green (the 30 late-r8 ops + the 20 r9 ops),
 # clearing the old never-checked backlog exactly as planned. The r11
 # never-driver-checked set now holds 123 ops: the 7 r10-new, the 25
@@ -138,21 +139,21 @@ def register(name: str, oracle: Optional[str] = None):
 # (q_agg_theil_index, q_agg_atkinson_index, q_stats_ttest_paired,
 # q_stats_f_test_variance, q_stats_kuiper_uniform,
 # q_seq_interevent_burstiness, q_win_stoch_rsi, q_win_mass_index,
-# q_win_pvo, q_win_nvi — anchored in ANCHOR_r12.json) and the r12
+# q_win_pvo, q_win_nvi — anchored in commit 63faf4a) and the r12
 # wave-2 registrations (q_win_qstick, q_win_bop, q_ts_arch_lm,
 # q_ts_permutation_entropy, q_llm_burrows_delta — anchored in
-# ANCHOR_r12b.json) and the r12 wave-3 registrations
+# commit 63faf4a) and the r12 wave-3 registrations
 # (q_mm_phash_neardup, q_quality_outage_runs,
-# q_agg_theil_decomposition — anchored in ANCHOR_r12c.json) and the
+# q_agg_theil_decomposition — anchored in commit 78dca95) and the
 # r12 wave-4 registrations (q_ts_dfa_alpha, q_stats_ks_two_sample —
-# anchored in ANCHOR_r12d.json) and the r12 wave-5 registrations
+# anchored in commit a80ad44) and the r12 wave-5 registrations
 # (q_ts_spectral_entropy, q_ts_binary_segmentation,
-# q_graph_modularity — ANCHOR_r12e.json; modularity's quadratic
+# q_graph_modularity — commit 1827062; modularity's quadratic
 # oracle joins the sampled-check family) and the r12 wave-6
 # registrations (q_llm_prefix_dup_rate,
-# q_llm_perplexity_filter_sweep — ANCHOR_r12f.json) and the r12
+# q_llm_perplexity_filter_sweep — commit 4ca9cb4) and the r12
 # wave-7 FINAL registrations (q_agg_ge2_index,
-# q_llm_ivf_nprobe_sweep — ANCHOR_r12g.json), every r12 op
+# q_llm_ivf_nprobe_sweep — commit 782b7dc), every r12 op
 # hash-verified at sf0.001/0.01/0.1 in its registration wave, form
 # the r13 front: exactly 23 + 27 = 50 never-driver-checked ops fill
 # the next rotation.
@@ -211,7 +212,7 @@ def register(name: str, oracle: Optional[str] = None):
 # (q_agg_audience_overlap, q_agg_mad_outliers, ...), then r6-era.
 # r16 ROTATION (exactly 50 — set DRIVER_CHECK_FIRST to this list at
 # the start of r16): the 7 r15-new ops first (never driver-checked;
-# each 3-SF hash-verified in its registration wave — ANCHOR_r15b),
+# each 3-SF hash-verified in its registration wave — commit b4b22f9),
 # then the 8 remaining r5-era names A-Z, then the freshness refill —
 # the first 35 of the 46 r6-era names A-Z (the driver last saw them
 # in r6; the remaining 11, q_tpch_q9_product_profit onward A-Z, slide
@@ -237,7 +238,7 @@ def register(name: str, oracle: Optional[str] = None):
 # r15 ROTATION (exactly 50 — set DRIVER_CHECK_FIRST to this list at
 # the start of r15): the 13 r14-new ops first (never driver-checked;
 # each oracle-verified at sf0.001/0.01/0.1 in its registration wave —
-# ANCHOR_r14_emb/b/c/d/e), then the freshness refill — the driver
+# commits 1e6362f, bb43de0, 47285f0), then the freshness refill — the driver
 # last saw these in r5; the first 37 of the 45 r5-era names A-Z
 # (q_agg_approx_distinct already rode r14's slot 50):
 #   q_agg_pietra_index, q_agg_palma_ratio, q_seq_markov_entropy_rate,
@@ -264,19 +265,20 @@ def register(name: str, oracle: Optional[str] = None):
 # q_win_period_over_period, q_win_streaks), then r6-era.
 # r14 STATUS: DRIVER_CHECK_FIRST below IS the written r14 rotation,
 # verbatim (set at the start of r14; the r13 list it replaced went
-# 50/50 green in CORRECTNESS_r13.json; the new list re-verified 50/50
+# 50/50 green in the round-13 correctness record (commit 70eaff2);
+# the new list re-verified 50/50
 # at sf0.01 the moment it was set — /tmp rotation check, committed
 # evidence is the round-close sweep). r14 registered 13 ops
 # (488 -> 501), every one hash-verified at sf0.001 + sf0.01 + sf0.1
-# in its registration wave and anchored on arrival (ANCHOR_r14_emb,
-# _r14b, _r14c, _r14d, _r14e — all floor-class). The r14 perf
+# in its registration wave and anchored on arrival (commits 1e6362f,
+# bb43de0, 47285f0 — all floor-class). The r14 perf
 # experiment (the embedding Arrow swap) landed as
 # similarity.exact_scores — see BASELINE.md r14 section: same-set
 # family total 54.5 s (r13) -> ~25 s, every former x12-30 op now
 # x6-9. r14 CLOSE evidence (final tree): 501/501 sf0.01 sweep +
 # vacuous audit 0 zero-row 0 uncounted; 483/483 sf0.1 full-oracle +
 # INVARIANTS 18/18 and all structural invariants; pytest 1033/0 (3
-# env-gated skips); full-registry single-window ANCHOR_r14.json
+# env-gated skips); full-registry single-window anchor (8d488b2)
 # (494 compared, 0 errors, 0.175x suite; common-481-op spark total
 # 488.6 -> 388.5 s vs r13); BENCH_FULL 341.6 s / 54-query core 46.9 s
 # (r13: 48.9). Sweep-last honored: no registration after the final
@@ -285,10 +287,11 @@ def register(name: str, oracle: Optional[str] = None):
 # BYTE-IDENTICAL (501/501, vacuous 0 — values unchanged by
 # construction, the r13 no-churn precedent); pytest 1033/0 (17:37);
 # the 34-op embedding family re-verified hash-green at all 3 SFs;
-# same-window revert re-times in ANCHOR_r14f.json.
+# same-window revert re-times in commit eb0cd53.
 # r15 STATUS: DRIVER_CHECK_FIRST below IS the written r15 rotation,
 # verbatim (set at the start of r15; the r14 list it replaced went
-# 50/50 green in CORRECTNESS_r14.json; the new list verified 50/50 at
+# 50/50 green in the round-14 correctness record (commit aed7f1e);
+# the new list verified 50/50 at
 # sf0.01 the moment it was set — /tmp rotation check). r15 executed
 # the r14 VERDICT/ADVICE plan in full: (1) the four ADVICE items —
 # element-level-None null semantics in the Arrow dot/unit_vec/
@@ -306,7 +309,7 @@ def register(name: str, oracle: Optional[str] = None):
 # frame <=2160 rows/type BY CONSTRUCTION; C(n,2) slopes + exact order
 # statistics driver-side in numpy, bit-identical IEEE arithmetic,
 # oracle unchanged) — 3.9 s -> 0.94 s, 0.45x vs DuckDB
-# (ANCHOR_r15_perf.json); abc_classification profiled (one-shot
+# (anchor record of commit 308f9dd); abc_classification profiled (one-shot
 # anchor cost is per-plan codegen: 4.14->1.31 s same-session with no
 # code change; landed the literal-t variant dropping the
 # tot-aggregate + crossJoin stage pair); copurchase_suppliers
@@ -315,7 +318,7 @@ def register(name: str, oracle: Optional[str] = None):
 # q_mm_pixel_stats, q_mm_aspect_bucket_pack, q_maint_bloom_sizing,
 # q_maint_retention_tiers, q_maint_incremental_watermark,
 # q_geo_voronoi_catchment, q_layout_range_bounds — each 3-SF
-# hash-verified on registration, wave-anchored (ANCHOR_r15b), and
+# hash-verified on registration, wave-anchored (commit b4b22f9), and
 # reference-tested (tests/test_r15_ops.py, 7 passing).
 # (4) Env-gated imports re-probed this round: google.protobuf, PIL,
 # av, soundfile, librosa ALL still absent — transformWithState's e2e
@@ -328,17 +331,18 @@ def register(name: str, oracle: Optional[str] = None):
 # 23/23 engine invariants (byte-identical to r14 — the 18 ops'
 # modules were untouched); full pytest 1053 passed / 0 failed / 3
 # env-gated skips (21:12). Full-registry single-window
-# ANCHOR_r15.json (498 compared, 10 capped at 300 s — the 7 r14 caps
+# anchor of commit 1472e0c (498 compared, 10 capped at 300 s — the 7 r14 caps
 # + 3 borderline dedup oracles): raw spark 519.7 s is a MIDNIGHT
 # WINDOW ARTIFACT — per-chunk medians vs r14 read 0.99-1.16 until
-# 00:00 then 1.94-2.32; the committed ANCHOR_r15_tail.json re-time
+# 00:00 then 1.94-2.32; the tail re-time committed with it
 # (151 tail ops, next window) lands at 0.70x the midnight segment /
 # 1.16x r14, and the clean-tail common-501 spark total is 436.8 s vs
 # r14's 405.7 (x1.08 — inside the documented container band; zero
 # normalized regressions survive; see BASELINE.md r15 anchor-window
 # note). Bench (close run): full suite 390.5 s, 54-query core 48.5 s
 # (r14 driver run 61.1, r14 builder close 46.9, r13 48.9 — in band;
-# scripts/bench_compare.py vs BENCH_r14: median drift x0.76, every
+# scripts/bench_compare.py vs the r14 bench record (aed7f1e): median
+# drift x0.76, every
 # flagged 'regression' a normalization artifact or first-sample
 # variance on untouched ops), streaming 6855 rows/s (4.2k-8.8k
 # band). Sweep-last honored: no registration after the final sweep;

@@ -18,10 +18,13 @@ area and compaction moves them to the archive. The SAME ``transform``
 callable is applied on both paths — Structured Streaming's batch/
 stream unification is what makes the shared definition correct.
 
-For aggregating transforms, point the tail at the upsert/foreachBatch
-merge sinks (streaming/upsert.py) instead of a blind append; this
-module's append handoff is for the map/enrich class of transforms,
-where batch+stream outputs union losslessly.
+For aggregating transforms, point the tail at a streaming view
+(streaming/continuous_view.py: ``ContinuousAggregateView``, or
+``UpsertView`` in streaming/upsert.py) instead of a blind append: a
+view started with a new checkpoint over an existing head merges that
+head into each snapshot it publishes. This module's append handoff is
+for the map/enrich class of transforms, where batch+stream outputs
+union losslessly.
 """
 
 from __future__ import annotations

@@ -1,38 +1,41 @@
-"""Continuously-maintained aggregate views: the streaming twin of
-:mod:`ex_hivent_spark.matview`.
+"""Continuously-maintained views: Spark's own streaming aggregation,
+published as versioned snapshots.
 
-Each micro-batch of an append-only stream is aggregated once, in the
-state's own shape, and folded as the delta into the SAME versioned
-view state the batch IVM maintains — so a dashboard aggregate is
-updated per batch at O(|batch| + |groups|) cost and published
-atomically (readers always see a complete snapshot, never a
-half-merged one). Each fold then vacuums all but ``KEEP_VERSIONS``
-snapshots: time travel reaches the head and its parent only.
+One code path serves every streaming view. :class:`SnapshotView` runs
+the view's ``aggregate`` over the stream in ``complete`` output mode,
+so Structured Streaming keeps the aggregation state in the
+checkpoint's state store and hands each micro-batch the WHOLE
+aggregate. Its foreachBatch publishes that frame as the view's next
+snapshot through ``versioned.write_snapshot`` (readers always see a
+complete snapshot, never a half-written one), then vacuums all but
+``KEEP_VERSIONS`` snapshots: time travel reaches the head and its
+parent only. The head snapshot is never read back, so a steady batch
+runs one Spark job, and min/max are Spark's own exact aggregates.
 
-Exactly-once without a separate ledger: the fold writes each new state
-through ``versioned.write_snapshot`` with the (query identity, batch
-id) pair recorded in the snapshot's own manifest, and the pointer
-rename commits DATA AND FENCE atomically. On checkpoint replay (crash
-between the snapshot commit and sink acknowledgment), the re-delivered
-batch finds its own id at the committed head UNDER THE SAME QUERY
-IDENTITY and skips — the same batch-id fencing discipline as
-streaming/consumer.py's idempotent quarantine writes, here made
-crash-atomic by the pointer protocol instead of a directory convention.
-The identity half of the fence matters because Structured Streaming
-batch ids are per-checkpoint: restarting the stream with a NEW
-checkpoint directory resets ids to 0, and a bare batch-id fence would
-silently drop every restarted batch whose id is below the old fence.
-Fencing on the pair (Delta's txnAppId+txnVersion discipline) instead
-folds batches from a new query identity and skips only true replays.
+Exactly-once: each snapshot's manifest records the (query identity,
+batch id) pair as ``batch:N@<checkpoint_dir>``, and the pointer rename
+commits data and fence atomically. A checkpoint replay of a batch
+whose publish already committed finds its own pair at the head and
+publishes nothing. It still runs the frame, into the ``noop`` sink:
+Spark fails a batch whose state stores did not all commit. Skipping
+the publish is sound because a fenced batch's state version was
+committed when its publish ran. The identity half of the fence
+matters because batch ids are per-checkpoint: a NEW checkpoint
+restarts them at 0, and must not be fenced out by the old ones.
 
-Scale shape: per batch, one read of the committed head (fence and
-state version), one partial-aggregating shuffle of the batch (|batch|
-rows) plus one join against the |groups|-sized state. The base stream
-is never re-read; state size is bounded by the group-key cardinality,
-and history by ``KEEP_VERSIONS``. Append-only streams produce only
-assertions (+1/+value); upstream deletes/updates belong to the batch
-path (matview.refresh over snapshot diffs), which shares the identical
-``fold_state`` so the two maintenance routes cannot diverge.
+A new checkpoint over a head another query published starts from an
+empty state store. ``start()`` then copies that head once to
+``<checkpoint_dir>/base`` and every publish of the query returns
+``merge(base, output)``. The base lives with the checkpoint, so it
+survives vacuum and restarts. One query maintains a view at a time:
+an older checkpoint resumed after another query published publishes
+its own state, without the other query's rows.
+
+Scale shape: per batch, one partial-aggregating shuffle of the batch
+into the state store and one write of the |groups|-sized aggregate.
+The base stream is never re-read. State is bounded by the key
+cardinality, view history by ``KEEP_VERSIONS``, and the state store's
+history by ``spark.sql.streaming.minBatchesToRetain``.
 
 Reference parity note: the reference (an Elixir event-transport
 client, SURVEY.md §0) consumes streams but materializes nothing; this
@@ -45,31 +48,92 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ex_hivent_spark import matview
+from ex_hivent_spark import fsutil, matview
 from ex_hivent_spark.sources import versioned
 
 FENCE_PREFIX = "batch:"
-# Snapshots a fold retains: the committed head and its parent.
+# Snapshots a publish retains: the committed head and its parent.
 KEEP_VERSIONS = 2
 
 
 def _committed_fence(head: dict | None) -> tuple[str | None, int]:
     """The (query identity, batch id) pair fenced by the committed head
-    manifest; (None, -1) for an unfenced/absent head. Legacy notes
-    without an identity parse as (None, batch)."""
+    manifest; (None, -1) for an absent head or one no view published."""
     note = head["note"] if head is not None else ""
-    if not note.startswith(FENCE_PREFIX):
+    if not note.startswith(FENCE_PREFIX) or "@" not in note:
         return None, -1
-    body = note[len(FENCE_PREFIX):]
-    if "@" in body:
-        n, txn = body.split("@", 1)
-        return txn, int(n)
-    return None, int(body)
+    n, txn = note[len(FENCE_PREFIX):].split("@", 1)
+    return txn, int(n)
 
 
-class ContinuousAggregateView:
-    """Fold an append-only stream's micro-batches into a versioned
-    aggregate view (count + decimal sums per group)."""
+def _has_offsets(spark: SparkSession, checkpoint_dir: str) -> bool:
+    """Whether the checkpoint has planned any batch."""
+    fs, Path = fsutil.hadoop_fs(spark)
+    offsets = Path(f"{checkpoint_dir}/offsets")
+    return bool(fs.exists(offsets)) and any(
+        s.getPath().getName().isdigit() for s in fs.listStatus(offsets)
+    )
+
+
+class SnapshotView:
+    """A view maintained by Spark's streaming aggregation in complete
+    mode. Subclasses supply ``aggregate(df)``, the view over a frame,
+    and ``merge(base, output)``, the view over two such views."""
+
+    def __init__(self, spark: SparkSession, view_dir: str):
+        self.spark = spark
+        self.view_dir = view_dir
+        # Query identity half of the fence, and the foreign head to
+        # merge into each publish; both set by start().
+        self._txn_id: str | None = None
+        self._base: DataFrame | None = None
+
+    def aggregate(self, df: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def merge(self, base: DataFrame, output: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def _publish(self, output: DataFrame, batch_id: int) -> None:
+        txn, fenced = _committed_fence(versioned.head(self.spark, self.view_dir))
+        if txn == self._txn_id and batch_id <= fenced:
+            # A replay of a published batch: run it only so that its
+            # state stores commit.
+            output.write.format("noop").mode("overwrite").save()
+            return
+        if self._base is not None:
+            output = self.merge(self._base, output)
+        versioned.write_snapshot(
+            self.spark, output, self.view_dir,
+            note=f"{FENCE_PREFIX}{batch_id}@{self._txn_id}",
+        )
+        versioned.vacuum(self.spark, self.view_dir, keep_last=KEEP_VERSIONS)
+
+    def start(self, stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
+        spark, base = self.spark, f"{checkpoint_dir}/base"
+        if not _has_offsets(spark, checkpoint_dir):
+            head = versioned.head(spark, self.view_dir)
+            if head is not None and _committed_fence(head)[0] != checkpoint_dir:
+                versioned.read_snapshot(spark, self.view_dir).write.mode(
+                    "overwrite"
+                ).parquet(base)
+        self._txn_id = checkpoint_dir
+        self._base = spark.read.parquet(base) if fsutil.exists(spark, base) else None
+        return (
+            self.aggregate(stream).writeStream.outputMode("complete")
+            .foreachBatch(self._publish)
+            .option("checkpointLocation", checkpoint_dir)
+            .start()
+        )
+
+    def read(self) -> DataFrame:
+        """The committed snapshot."""
+        return versioned.read_snapshot(self.spark, self.view_dir)
+
+
+class ContinuousAggregateView(SnapshotView):
+    """An append-only stream's aggregate view: count, exact decimal sums
+    and min/max per group, in the batch IVM's state shape."""
 
     def __init__(
         self,
@@ -79,60 +143,17 @@ class ContinuousAggregateView:
         sum_cols: list[str],
         minmax_cols: list[str] = (),
     ):
-        self.spark = spark
-        self.view_dir = view_dir
+        super().__init__(spark, view_dir)
         self.group_cols = group_cols
         self.sum_cols = sum_cols
-        # Append-only streams produce only assertions, so the monotonic
-        # least/greatest fold is always sound here — no repair pass.
         self.minmax_cols = list(minmax_cols)
-        # Query identity half of the exactly-once fence; set by start()
-        # from the checkpoint location (batch ids are per-checkpoint).
-        self._txn_id: str | None = None
 
-    def _fold_batch(self, batch: DataFrame, batch_id: int) -> None:
-        head = versioned.head(self.spark, self.view_dir)
-        fenced_txn, fenced_batch = _committed_fence(head)
-        same_identity = (
-            fenced_txn is None
-            or self._txn_id is None
-            or fenced_txn == self._txn_id
-        )
-        if batch_id <= fenced_batch and same_identity:
-            return  # checkpoint replay of an already-committed fold
-        # A lower/equal batch id under a DIFFERENT query identity is a
-        # restart with a fresh checkpoint (ids reset to 0): new data,
-        # fold it — never silently drop it.
-        delta = matview._aggregate(
-            batch, self.group_cols, self.sum_cols, self.minmax_cols
-        )
-        if head is None:
-            new_state = delta
-        else:
-            state = versioned.read_snapshot(
-                self.spark, self.view_dir, head["version"]
-            )
-            new_state = matview.fold_state(
-                state, delta, self.group_cols, self.sum_cols, self.minmax_cols
-            )
-        fence = (
-            f"{FENCE_PREFIX}{batch_id}@{self._txn_id}"
-            if self._txn_id is not None
-            else f"{FENCE_PREFIX}{batch_id}"
-        )
-        versioned.write_snapshot(
-            self.spark, new_state, self.view_dir, note=fence
-        )
-        versioned.vacuum(self.spark, self.view_dir, keep_last=KEEP_VERSIONS)
-
-    def start(self, stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        self._txn_id = checkpoint_dir
-        return (
-            stream.writeStream.foreachBatch(self._fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
+    def aggregate(self, df: DataFrame) -> DataFrame:
+        return matview._aggregate(
+            df, self.group_cols, self.sum_cols, self.minmax_cols
         )
 
-    def read(self) -> DataFrame:
-        """Current state snapshot (count + exact decimal sums)."""
-        return versioned.read_snapshot(self.spark, self.view_dir)
+    def merge(self, base: DataFrame, output: DataFrame) -> DataFrame:
+        return matview.fold_state(
+            base, output, self.group_cols, self.sum_cols, self.minmax_cols
+        )

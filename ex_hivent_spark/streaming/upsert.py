@@ -1,27 +1,26 @@
-"""Streaming upsert sink: a foreachBatch-maintained materialized view
-holding the LATEST row per key.
+"""Streaming upsert view: the LATEST row per key, as a versioned table.
 
 The batch twin is ``q_last_event`` (max-ts row per user); this is its
 continuously-maintained form — the reference's Memory.last-per-key
-semantics (memory.ex:123) turned into a serving table. Plain parquet
-has no MERGE, so each micro-batch rewrites the view via
-read-union-reduce-overwrite staged through the crash-safe swap in
-:mod:`ex_hivent_spark.fsutil` (ready-marker + explicit roll-forward /
-roll-back recovery); on a lakehouse format (Delta/Iceberg) the reduce
-becomes a keyed MERGE and the plan below is unchanged.
+semantics (memory.ex:123) turned into a serving table. It runs on the
+one view path of :mod:`ex_hivent_spark.streaming.continuous_view`:
+Spark's streaming aggregation keeps the latest row per key in its
+state store, and each micro-batch publishes the whole reduction as the
+view's next snapshot. ``read()`` resolves the snapshot pointer.
 
-Scale notes: the rewrite cost is O(|view|) per batch, which is the
-honest cost of parquet-as-serving-table; the reduce itself is one
-max(struct) hash aggregate — no window sort, map-side partials. State
-correctness does not depend on batch replay: the reduce is idempotent
-(max of a set is unaffected by re-delivery).
+Scale notes: the publish writes O(|keys|) rows per batch, the honest
+cost of parquet-as-serving-table; the reduce itself is one max(struct)
+hash aggregate — no window sort, map-side partials. A new checkpoint
+over an existing view merges by the same reduce, over the union of
+that view's head and each batch's output.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+
+from ex_hivent_spark.streaming.continuous_view import SnapshotView
 
 
 def latest_per_key(df: DataFrame, key: str, ts_col: str, cols: list[str]) -> DataFrame:
@@ -36,8 +35,8 @@ def latest_per_key(df: DataFrame, key: str, ts_col: str, cols: list[str]) -> Dat
     )
 
 
-class UpsertView:
-    """Continuously-maintained latest-per-key parquet view."""
+class UpsertView(SnapshotView):
+    """Continuously-maintained latest-per-key view."""
 
     def __init__(
         self,
@@ -47,40 +46,13 @@ class UpsertView:
         ts_col: str,
         cols: list[str],
     ):
-        self.spark = spark
-        self.view_dir = view_dir
+        super().__init__(spark, view_dir)
         self.key = key
         self.ts_col = ts_col
         self.cols = cols
 
-    def _merge_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from ex_hivent_spark import fsutil
+    def aggregate(self, df: DataFrame) -> DataFrame:
+        return latest_per_key(df, self.key, self.ts_col, self.cols)
 
-        spark = self.spark
-        incoming = latest_per_key(batch, self.key, self.ts_col, self.cols)
-        # Explicit recovery instead of except-Exception: a half-completed
-        # prior swap is rolled forward/back first, and only a verified
-        # absence of the view means "first batch" — any real read error
-        # (permissions, corrupt footer) propagates and fails the batch so
-        # the checkpoint retries it rather than silently resetting state.
-        if fsutil.recover_swap(spark, self.view_dir):
-            current = spark.read.parquet(self.view_dir).select(
-                self.key, self.ts_col, *self.cols
-            )
-            merged = latest_per_key(
-                current.unionByName(incoming), self.key, self.ts_col, self.cols
-            )
-        else:
-            merged = incoming
-        merged.write.mode("overwrite").parquet(fsutil.staging_path(self.view_dir))
-        fsutil.publish_swap(spark, self.view_dir)
-
-    def start(self, stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream.writeStream.foreachBatch(self._merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
-
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.view_dir)
+    def merge(self, base: DataFrame, output: DataFrame) -> DataFrame:
+        return self.aggregate(base.unionByName(output))

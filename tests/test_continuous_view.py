@@ -1,4 +1,4 @@
-"""Streaming continuous aggregate views: every micro-batch fold must
+"""Streaming continuous aggregate views: every micro-batch publish must
 land on exactly the batch-aggregate of all data seen so far (bit-equal
 decimal sums), survive restarts from the checkpoint without double
 counting, and skip replayed batch ids (exactly-once fencing)."""
@@ -6,6 +6,7 @@ counting, and skip replayed batch ids (exactly-once fencing)."""
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -35,14 +36,19 @@ def _expected(spark, tmp_path):
 
 
 def _make(spark, tmp_path):
-    import os
-
     os.makedirs(f"{tmp_path}/src", exist_ok=True)
     view = ContinuousAggregateView(
         spark, f"{tmp_path}/view", ["cat"], ["val"]
     )
     stream = spark.readStream.schema(SCHEMA).json(f"{tmp_path}/src")
     return view, stream
+
+
+def _uncommit(chk, batch_id):
+    """Drop a batch's commit record, as a crash after its publish but
+    before the commit would: the next start replays the batch."""
+    os.remove(f"{chk}/commits/{batch_id}")
+    os.remove(f"{chk}/commits/.{batch_id}.crc")
 
 
 def test_folds_match_batch_aggregate_across_batches(spark, tmp_path):
@@ -79,21 +85,30 @@ def test_restart_from_checkpoint_no_double_count(spark, tmp_path):
 
 def test_replayed_batch_id_is_fenced(spark, tmp_path):
     view, stream = _make(spark, tmp_path)
+    chk = f"{tmp_path}/chk"
     _write_file(tmp_path, "a.json", [("x", 1.0), ("y", 2.0)])
-    q = view.start(stream, f"{tmp_path}/chk")
+    q = view.start(stream, chk)
     q.processAllAvailable()
     q.stop()
 
     head_before = versioned.current_version(spark, f"{tmp_path}/view")
     state_before = _rows(view.read())
-    # simulate the crash-replay delivery of batch 0
-    replay = spark.createDataFrame([("x", 99.0)], SCHEMA)
-    view._fold_batch(replay, 0)
-    assert versioned.current_version(spark, f"{tmp_path}/view") == head_before
-    assert _rows(view.read()) == state_before
-    # a genuinely NEW batch id still folds
-    view._fold_batch(replay, 1)
-    assert _rows(view.read()) != state_before
+    # the crash-replay delivery of batch 0
+    _uncommit(chk, 0)
+    view2, stream2 = _make(spark, tmp_path)
+    q2 = view2.start(stream2, chk)
+    try:
+        q2.processAllAvailable()
+        assert os.path.exists(f"{chk}/commits/0")
+        assert versioned.current_version(spark, f"{tmp_path}/view") == head_before
+        assert _rows(view2.read()) == state_before
+        # a genuinely NEW batch id still folds
+        _write_file(tmp_path, "b.json", [("x", 99.0)])
+        q2.processAllAvailable()
+        assert _rows(view2.read()) != state_before
+        assert _rows(view2.read()) == _rows(_expected(spark, tmp_path))
+    finally:
+        q2.stop()
 
 
 def test_state_history_is_time_travelable(spark, tmp_path):
@@ -116,11 +131,8 @@ def test_state_history_is_time_travelable(spark, tmp_path):
 
 
 def test_streaming_minmax_folds_monotonically(spark, tmp_path):
-    """Append-only batches fold min/max with least/greatest — across
-    two batches the state must equal the batch aggregate of all data,
-    extremes included."""
-    import os
-
+    """Across two batches of an append-only stream the state must equal
+    the batch aggregate of all data, extremes included."""
     from ex_hivent_spark.streaming.continuous_view import (
         ContinuousAggregateView,
     )
@@ -150,8 +162,6 @@ def test_new_checkpoint_restart_is_not_fenced_out(spark, tmp_path):
     batch ids to 0. A bare batch-id fence would silently drop every
     restarted batch whose id is <= the old fence (data loss); the
     (query identity, batch id) pair fence must fold them instead."""
-    import os
-
     view, stream = _make(spark, tmp_path)
     _write_file(tmp_path, "a.json", [("x", 1.0)])
     _write_file(tmp_path, "b.json", [("x", 2.0)])
@@ -165,18 +175,22 @@ def test_new_checkpoint_restart_is_not_fenced_out(spark, tmp_path):
     os.makedirs(f"{tmp_path}/src2", exist_ok=True)
     with open(f"{tmp_path}/src2/c.json", "w") as f:
         f.write(json.dumps({"cat": "y", "val": 7.5}) + "\n")
-    stream2 = spark.readStream.schema(SCHEMA).json(f"{tmp_path}/src2")
-    q2 = view.start(stream2, f"{tmp_path}/chk2")
-    q2.processAllAvailable()
-    q2.stop()
 
+    def run_chk2():
+        stream2 = spark.readStream.schema(SCHEMA).json(f"{tmp_path}/src2")
+        q2 = view.start(stream2, f"{tmp_path}/chk2")
+        q2.processAllAvailable()
+        q2.stop()
+
+    run_chk2()
     state = view.read()
     assert state.filter(F.col("cat") == "y").count() == 1  # not dropped
     got_sum = state.agg(F.sum("n_rows")).first()[0]
     assert got_sum == 3  # 2 from the first query + 1 from the restart
 
     # and a true replay under the SAME identity still fences
-    replay = spark.createDataFrame([("y", 7.5)], SCHEMA)
     before = _rows(view.read())
-    view._fold_batch(replay, 0)  # chk2 already committed batch 0
+    _uncommit(f"{tmp_path}/chk2", 0)  # chk2 already committed batch 0
+    run_chk2()
+    assert os.path.exists(f"{tmp_path}/chk2/commits/0")
     assert _rows(view.read()) == before

@@ -1,5 +1,5 @@
 """Crash-safety of the staging-swap publish protocol (fsutil) and its
-users (upsert view, incremental rollup, two-phase-commit sink).
+users (incremental rollup, two-phase-commit sink).
 
 Each test constructs the on-disk state a crash at a specific protocol
 step leaves behind, then asserts recovery restores a consistent view

@@ -163,28 +163,45 @@ def test_versioned_pointer_commit_is_crash_safe(spark, tmp_path):
 def test_versioned_pointer_rolls_forward_after_crash_mid_rename(spark, tmp_path):
     """A crash between the pointer commit's delete and rename leaves
     only ``_VERSION.tmp``: the head must still resolve to the committed
-    version, and the next continuous-view fold must keep the exact state
-    instead of restarting from its own batch and vacuuming every real
+    version, and the next continuous-view publish must keep the exact
+    state instead of restarting from version 0 and vacuuming every real
     snapshot as an orphan above the head."""
+    import json
     import os
 
     from ex_hivent_spark.sources import versioned as V
     from ex_hivent_spark.streaming.continuous_view import ContinuousAggregateView
 
     t = str(tmp_path / "view")
+    src = tmp_path / "src"
+    src.mkdir()
     view = ContinuousAggregateView(spark, t, ["cat"], ["val"])
 
-    def fold(batch_id):
-        batch = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "cat string, val double")
-        view._fold_batch(batch, batch_id)
+    def add_file(i):
+        with open(src / f"f{i}.json", "w") as f:
+            for cat, val in [("a", 1.0), ("b", 2.0)]:
+                f.write(json.dumps({"cat": cat, "val": val}) + "\n")
+
+    def drain():
+        stream = (
+            spark.readStream.schema("cat string, val double")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+        q = view.start(stream, str(tmp_path / "chk"))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
 
     def state():
         return sorted(
             (r.cat, r.n_rows, float(r.sum_val)) for r in view.read().collect()
         )
 
-    for batch_id in range(3):
-        fold(batch_id)
+    for i in range(3):
+        add_file(i)
+    drain()
     assert state() == [("a", 3, 3.0), ("b", 3, 6.0)]
     committed = V.current_version(spark, t)
 
@@ -193,7 +210,8 @@ def test_versioned_pointer_rolls_forward_after_crash_mid_rename(spark, tmp_path)
     assert V.head(spark, t)["version"] == committed
     assert os.path.exists(f"{t}/_VERSION")
 
-    fold(3)
+    add_file(3)
+    drain()
     assert state() == [("a", 4, 4.0), ("b", 4, 8.0)]
     assert V.current_version(spark, t) == committed + 1
     assert V.read_snapshot(spark, t, committed).count() == 2

@@ -1,6 +1,7 @@
-"""The continuous view's one fold path: one read of the committed head,
-one aggregate of the batch, a snapshot write that observes its row count
-instead of reading it back, and a history bounded to head and parent."""
+"""The continuous view's one publish path: Spark's streaming aggregate
+written as the next snapshot in one job, a snapshot write that observes
+its row count instead of reading it back, and a history bounded to head
+and parent."""
 
 from __future__ import annotations
 
@@ -25,10 +26,27 @@ def _versions(view_dir):
     return sorted(int(n[2:]) for n in os.listdir(view_dir) if n.startswith("v="))
 
 
-def _batch(spark, i):
-    return spark.createDataFrame(
-        [(f"g{j % 3}", float(i * 10 + j)) for j in range(6)], SCHEMA
-    )
+def _batch(i):
+    return [(f"g{j % 3}", float(i * 10 + j)) for j in range(6)]
+
+
+def _add_file(src, i, rows):
+    with open(src / f"f{i}.json", "w") as f:
+        for cat, val in rows:
+            f.write(json.dumps({"cat": cat, "val": val}) + "\n")
+
+
+def _stream(spark, src):
+    """One file per micro-batch."""
+    return spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).json(str(src))
+
+
+def _drain(view, spark, src, chk):
+    q = view.start(_stream(spark, src), str(chk))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def _settled_job_ids(spark, group):
@@ -38,21 +56,16 @@ def _settled_job_ids(spark, group):
     return set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
-def test_steady_fold_runs_at_most_five_jobs(spark, tmp_path):
+def test_steady_fold_runs_one_job(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
 
     def add_file(i):
-        with open(src / f"f{i}.json", "w") as f:
-            for j in range(200):
-                f.write(json.dumps({"cat": f"g{j % 40}", "val": i + j * 0.5}) + "\n")
+        _add_file(src, i, [(f"g{j % 40}", i + j * 0.5) for j in range(200)])
 
     view = ContinuousAggregateView(spark, str(tmp_path / "view"), ["cat"], ["val"])
-    stream = (
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).json(str(src))
-    )
     add_file(0)
-    q = view.start(stream, str(tmp_path / "chk"))
+    q = view.start(_stream(spark, src), str(tmp_path / "chk"))
     try:
         q.processAllAvailable()
         group = str(q.runId)
@@ -62,21 +75,25 @@ def test_steady_fold_runs_at_most_five_jobs(spark, tmp_path):
         fold_jobs = _settled_job_ids(spark, group) - before
     finally:
         q.stop()
-    assert 1 <= len(fold_jobs) <= 5
+    assert len(fold_jobs) == 1
     assert versioned.current_version(spark, view.view_dir) == 1
 
 
 def test_history_is_bounded_and_crash_safe(spark, tmp_path):
+    src, chk = tmp_path / "src", tmp_path / "chk"
+    src.mkdir()
     view_dir = str(tmp_path / "view")
     view = ContinuousAggregateView(spark, view_dir, ["cat"], ["val"])
     for i in range(4):
-        view._fold_batch(_batch(spark, i), i)
-    # a crashed fold leaves an uncommitted snapshot above the head
+        _add_file(src, i, _batch(i))
+    _drain(view, spark, src, chk)
+    # a crashed publish leaves an uncommitted snapshot above the head
     head = versioned.current_version(spark, view_dir)
     spark.createDataFrame([("junk", 1.0)], SCHEMA).write.parquet(
         f"{view_dir}/v={head + 1}"
     )
-    view._fold_batch(_batch(spark, 4), 4)
+    _add_file(src, 4, _batch(4))
+    _drain(view, spark, src, chk)
 
     head = versioned.current_version(spark, view_dir)
     assert head == 4
@@ -84,34 +101,23 @@ def test_history_is_bounded_and_crash_safe(spark, tmp_path):
     assert versioned.read_snapshot(spark, view_dir, head - 1).count() == 3
     with pytest.raises(FileNotFoundError):
         versioned.read_snapshot(spark, view_dir, head - 2)
-    seen = _batch(spark, 0)
-    for i in range(1, 5):
-        seen = seen.unionByName(_batch(spark, i))
+    seen = spark.createDataFrame([r for i in range(5) for r in _batch(i)], SCHEMA)
     want = _rows(matview._aggregate(seen, ["cat"], ["val"]))
     assert _rows(view.read()) == want
 
     # a replayed batch id is still fenced: no new version, same state
-    view._fold_batch(spark.createDataFrame([("g0", 99.0)], SCHEMA), 4)
+    os.remove(chk / "commits" / "4")
+    os.remove(chk / "commits" / ".4.crc")
+    _drain(view, spark, src, chk)
+    assert (chk / "commits" / "4").exists()
     assert versioned.current_version(spark, view_dir) == head
     assert _rows(view.read()) == want
     assert _versions(view_dir) == [head - 1, head]
 
 
-def test_first_and_later_folds_share_one_path(spark, tmp_path, monkeypatch):
-    aggregate = matview._aggregate
-    calls = {"aggregate": 0, "fold_state": 0}
-
-    def counted(name, fn):
-        def wrapper(*args, **kwargs):
-            calls[name] += 1
-            return fn(*args, **kwargs)
-
-        return wrapper
-
-    monkeypatch.setattr(matview, "_aggregate", counted("aggregate", aggregate))
-    monkeypatch.setattr(
-        matview, "fold_state", counted("fold_state", matview.fold_state)
-    )
+def test_first_and_later_folds_share_one_path(spark, tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
     view = ContinuousAggregateView(
         spark, str(tmp_path / "view"), ["cat"], ["val"], minmax_cols=["val"]
     )
@@ -120,14 +126,18 @@ def test_first_and_later_folds_share_one_path(spark, tmp_path, monkeypatch):
         [("x", 9.5), (None, -2.0), ("z", 0.25), (None, 7.0)],
     ]
     seen = []
-    for i, rows in enumerate(batches):
-        seen += rows
-        view._fold_batch(spark.createDataFrame(rows, SCHEMA), i)
-        assert calls == {"aggregate": i + 1, "fold_state": i}
-        want = aggregate(
-            spark.createDataFrame(seen, SCHEMA), ["cat"], ["val"], ["val"]
-        )
-        assert _rows(view.read()) == _rows(want)
+    q = view.start(_stream(spark, src), str(tmp_path / "chk"))
+    try:
+        for i, rows in enumerate(batches):
+            seen += rows
+            _add_file(src, i, rows)
+            q.processAllAvailable()
+            want = matview._aggregate(
+                spark.createDataFrame(seen, SCHEMA), ["cat"], ["val"], ["val"]
+            )
+            assert _rows(view.read()) == _rows(want)
+    finally:
+        q.stop()
     null_row = [r for r in view.read().collect() if r["cat"] is None]
     assert len(null_row) == 1
     assert (null_row[0]["n_rows"], null_row[0]["min_val"], null_row[0]["max_val"]) == (
