@@ -87,35 +87,32 @@ def enrich(
     df: DataFrame,
     producer: str,
     partition_count: int = DEFAULT_PARTITION_COUNT,
-    name_col: str = "name",
-    payload_col: str = "payload",
-    version_col: str = "version",
-    cid_col: str | None = "cid",
-    key_col: str | None = "key",
 ) -> DataFrame:
     """Server-side ingestion enrichment as a pure projection: builds the
     full envelope struct with producer/uuid/created_at/cid defaults and
     the derived partition key + partition id.
 
-    ``uuid`` and ``created_at`` are taken from ``df``'s columns of those
-    names when present, else generated here (``uuid()``,
-    ``current_timestamp()``). With both stamped and every ``cid`` set,
-    the projection re-evaluates to the same rows.
+    ``df`` has ``name``, ``payload`` and ``version`` columns. ``cid``,
+    ``key``, ``uuid`` and ``created_at`` are taken from ``df``'s columns
+    of those names when present, else generated here (``uuid()``, a
+    payload-derived key, ``uuid()``, ``current_timestamp()``). With
+    ``uuid`` and ``created_at`` stamped and every ``cid`` set, the
+    projection re-evaluates to the same rows.
 
     Map-side only (no shuffle); pair with
     ``df.repartition(partition_count, "partition_id")`` when downstream
     per-partition processing needs co-location (consumer.ex:105).
     """
-    cid = F.col(cid_col) if cid_col and cid_col in df.columns else F.lit(None).cast("string")
-    key = F.col(key_col) if key_col and key_col in df.columns else F.lit(None).cast("string")
-    key_final = derived_key(key, F.col(payload_col))
+    cid = F.col("cid") if "cid" in df.columns else F.lit(None).cast("string")
+    key = F.col("key") if "key" in df.columns else F.lit(None).cast("string")
+    key_final = derived_key(key, F.col("payload"))
     uuid = F.col("uuid") if "uuid" in df.columns else F.expr("uuid()")
     created_at = (
         F.col("created_at") if "created_at" in df.columns else F.current_timestamp()
     )
     meta = F.struct(
-        F.col(name_col).alias("name"),
-        F.col(version_col).cast("int").alias("version"),
+        F.col("name"),
+        F.col("version").cast("int").alias("version"),
         F.lit(producer).alias("producer"),
         F.coalesce(cid, F.expr("uuid()")).alias("cid"),
         uuid.alias("uuid"),
@@ -123,8 +120,8 @@ def enrich(
         created_at.alias("created_at"),
     )
     return df.select(
-        F.col(name_col).alias("name"),
-        F.col(payload_col).alias("payload"),
+        F.col("name"),
+        F.col("payload"),
         meta.alias("meta"),
         partition_id(key_final, partition_count).cast("int").alias("partition_id"),
     )

@@ -1,6 +1,6 @@
 """Crash-safe directory publish (staging swap) for the parquet tables
-that maintenance.py rewrites in place (compaction, the incremental
-rollup, keyed delete and MERGE).
+that maintenance.py rewrites in place (compaction, keyed delete, MERGE
+and optimize_table).
 
 Protocol — writer side (:func:`publish_swap`):
 

@@ -1,10 +1,18 @@
-"""Table maintenance: small-file compaction.
+"""Table maintenance: small-file compaction, in-place rewrites and the
+incremental hourly rollup.
 
 Streaming sinks and partitioned appends accumulate small files (one per
 micro-batch per partition); at 100 TB the resulting file-listing and
 per-file open costs dominate scan time long before data volume does.
 Compaction rewrites a table directory into ~target-sized files — the
 routine maintenance job every file-based lakehouse runs.
+
+Compaction, keyed delete, MERGE and ``optimize_table`` rewrite a plain
+parquet directory in place through the crash-safe staging swap
+(fsutil). The hourly rollup is instead a streaming view
+(``refresh_time_rollup``): its checkpoint records which event files it
+has read and its versioned snapshot publishes the aggregate, so it
+keeps no progress record of its own.
 """
 
 from __future__ import annotations
@@ -98,88 +106,56 @@ def zorder_write(
     )
 
 
-PROCESSED_MANIFEST = "_PROCESSED.json"
-
-
 def refresh_time_rollup(
     spark: SparkSession,
     events_path: str,
     rollup_path: str,
-    processed_marker: str | None = None,
 ) -> int:
     """Incrementally maintain an hourly (window_start, event_type) →
-    (n_events, sum_value) rollup: aggregate only source files not yet
-    recorded in the processed-file manifest, merge into the existing
-    rollup by SUMMING partials (count and decimal-sum are both
-    associative, so merging partial aggregates is exact), and publish
-    via the crash-safe staging swap.
+    (n_rows, sum_value) rollup of the parquet events under
+    ``events_path``: one drain of a
+    :class:`~ex_hivent_spark.streaming.continuous_view.ContinuousAggregateView`
+    whose checkpoint is ``<rollup_path>/_checkpoint``.
 
-    The manifest lives INSIDE the rollup directory
-    (``<rollup>/_PROCESSED.json``, underscore-prefixed so Spark's
-    parquet reader ignores it) and is written into the staging dir
-    before the swap — data and marker commit in the same atomic rename,
-    so a crash can never publish merged data without recording its
-    inputs (which would double-count them on the next refresh).
-    ``processed_marker`` is accepted for back-compat as a read-only
-    legacy location; it is no longer written.
+    The file source records the files it has read in the checkpoint,
+    the state store keeps the aggregate (count and exact
+    ``decimal(25,6)``-based sum), and each batch publishes the whole
+    aggregate as the next snapshot of the versioned table at
+    ``rollup_path`` (read it with ``versioned.read_snapshot``). The
+    snapshot's note fences the batch, so a replay after a crash
+    between publish and commit publishes nothing: no double count.
 
-    This is the batch form of a continuous aggregate: cost per refresh
-    is O(new data) + O(|rollup|), never O(all history) — the property
-    that keeps a 100 TB/day rollup maintainable. Returns the number of
-    newly processed files.
+    Cost per refresh is O(new files) + O(|rollup|), never O(all
+    history). Returns the events folded into a newly published
+    snapshot; a no-op refresh and a fenced replay both return 0.
     """
-    import glob
-    import json
-    import os
-
     from pyspark.sql import functions as F
 
-    from ex_hivent_spark import fsutil
+    from ex_hivent_spark.sources import versioned
+    from ex_hivent_spark.streaming.continuous_view import (
+        ContinuousAggregateView,
+        _committed_fence,
+    )
 
-    view_exists = fsutil.recover_swap(spark, rollup_path)
-    done: set[str] = set()
-    manifest_path = f"{rollup_path}/{PROCESSED_MANIFEST}"
-    if view_exists and fsutil.exists(spark, manifest_path):
-        done = set(json.loads(fsutil.read_text_file(spark, manifest_path)))
-    elif processed_marker and os.path.exists(processed_marker):
-        done = set(json.load(open(processed_marker)))
-    all_files = sorted(glob.glob(f"{events_path}/*.parquet"))
-    new_files = [f for f in all_files if f not in done]
-    if not new_files:
-        return 0
-
-    partial = (
-        spark.read.parquet(*new_files)
-        .groupBy(
-            F.date_trunc("hour", "ts").alias("window_start"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(25,6)")).alias("sum_value_dec"),
+    _, fenced = _committed_fence(versioned.head(spark, rollup_path))
+    view = ContinuousAggregateView(
+        spark, rollup_path, ["window_start", "event_type"], ["value"]
+    )
+    stream = (
+        spark.readStream.schema("ts timestamp, event_type string, value double")
+        .parquet(events_path)
+        .select(
+            F.date_trunc("hour", "ts").alias("window_start"), "event_type", "value"
         )
     )
-    if view_exists:
-        current = spark.read.parquet(rollup_path)
-        merged = (
-            current.unionByName(partial)
-            .groupBy("window_start", "event_type")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("sum_value_dec").alias("sum_value_dec"),
-            )
-        )
-    else:
-        merged = partial
-
-    staging = fsutil.staging_path(rollup_path)
-    merged.write.mode("overwrite").parquet(staging)
-    fsutil.write_text_file(
-        spark,
-        f"{staging}/{PROCESSED_MANIFEST}",
-        json.dumps(sorted(done | set(new_files))),
+    query = view.start(stream, f"{rollup_path}/_checkpoint")
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    return sum(
+        p["numInputRows"] for p in query.recentProgress if p["batchId"] > fenced
     )
-    fsutil.publish_swap(spark, rollup_path)
-    return len(new_files)
 
 
 def delete_keys(

@@ -16,8 +16,11 @@ Composition: the base table is a :mod:`sources.versioned` table, the
 change feed is ``snapshot_diff(include_old=True)`` (one join of two
 immutable snapshots), the view state itself is ANOTHER versioned table
 (so view refreshes are atomic, time-travelable, and crash-safe via the
-same pointer-rename commit), and a ``_MATVIEW.json`` manifest pins the
-view definition plus the base version it reflects.
+same pointer-rename commit), and a ``_MATVIEW.json`` manifest, written
+once by :func:`create`, pins the view definition. The base version the
+view reflects is recorded in one place only: the note of the view's
+head snapshot, which commits with the state in the same pointer
+rename.
 
 Scale shape: refresh cost is O(|diff|) + one join against the view
 state on the group key — never a base-table scan. At 100 TB with a
@@ -175,7 +178,6 @@ def create(
                 "group_cols": group_cols,
                 "sum_cols": sum_cols,
                 "minmax_cols": list(minmax_cols),
-                "base_version": base_version,
             }
         ),
     )
@@ -185,20 +187,15 @@ def create(
 _NOTE_RE = re.compile(r"matview (?:full @ base |incremental base v\d+->)v(\d+)")
 
 
-def _committed_base_version(spark: SparkSession, view_dir: str) -> int | None:
-    """The base version the COMMITTED view head actually reflects,
-    recovered from the head snapshot's note ("matview full @ base vN"
-    / "matview incremental base vA->vB"). This — not the separately
-    written _MATVIEW.json — is the crash-safe source of truth: the
-    state snapshot and the manifest update are two writes, and a crash
-    between them would otherwise make the next refresh re-apply the
-    same diff and double-count. Returns None for a head whose note
-    doesn't parse (pre-convention snapshot)."""
+def _committed_base_version(spark: SparkSession, view_dir: str) -> int:
+    """The base version the committed view head reflects, read from
+    the head snapshot's note ("matview full @ base vN" / "matview
+    incremental base vA->vB"). The note commits with the state in one
+    pointer rename, so no crash can leave the state and its base
+    version apart: a refresh after a crash never re-applies a diff the
+    head already folded."""
     head = versioned.head(spark, view_dir)
-    if head is None:
-        return None
-    match = _NOTE_RE.match(head["note"])
-    return int(match.group(1)) if match else None
+    return int(_NOTE_RE.match(head["note"]).group(1))
 
 
 def refresh(spark: SparkSession, view_dir: str) -> dict:
@@ -207,23 +204,11 @@ def refresh(spark: SparkSession, view_dir: str) -> dict:
     ``{mode, base_from, base_to, changes, groups_touched}``; ``mode``
     is "noop" when the base hasn't moved.
 
-    Crash safety: the state snapshot commit (pointer rename) and the
-    _MATVIEW.json base_version update are two separate writes. The
-    committed head's note encodes the base version it reflects, so
-    refresh fences on THAT — if the manifest lags (crash between the
-    two writes), the note wins and the manifest is healed instead of
-    double-applying the diff."""
+    ``base_from`` is the base version named by the committed head's
+    note, and the new snapshot's note names ``base_to``: state and
+    progress commit together, so refresh writes no manifest."""
     m = _read_manifest(spark, view_dir)
-    base_from = m["base_version"]
-    committed = _committed_base_version(spark, view_dir)
-    if committed is not None and committed != base_from:
-        # Manifest lags the committed state (crash after snapshot
-        # commit, before manifest write). Trust the snapshot.
-        base_from = committed
-        m["base_version"] = committed
-        fsutil.write_text_file(
-            spark, _manifest_path(view_dir), json.dumps(m)
-        )
+    base_from = _committed_base_version(spark, view_dir)
     base_to = versioned.current_version(spark, m["base_dir"])
     if base_to == base_from:
         return {
@@ -342,8 +327,6 @@ def refresh(spark: SparkSession, view_dir: str) -> dict:
         view_dir,
         note=f"matview incremental base v{base_from}->v{base_to}",
     )
-    m["base_version"] = base_to
-    fsutil.write_text_file(spark, _manifest_path(view_dir), json.dumps(m))
     return {
         "mode": "incremental",
         "base_from": base_from,

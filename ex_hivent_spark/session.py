@@ -17,7 +17,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ex_hivent_spark.catalog import _SESSION_CONFS
 from ex_hivent_spark.config import setting, setting_integer
+
+_AQE_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Coalesce shuffle partitions to the advisory size instead of
+    # preserving max parallelism: measured 33% suite speedup at
+    # sf0.1/local[32] (scheduling overhead dominates 1 MB tasks),
+    # and on a tuned cluster right-sized reducers are best practice
+    # (parallelismFirst=true is Spark's regression-avoidance
+    # default, not its recommendation).
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32m",
+}
 
 
 def _default_shuffle_partitions() -> int:
@@ -40,52 +55,28 @@ def get_session(
         # Static confs (master, driver memory) cannot change on a live
         # session, but every conf correctness depends on is runtime-settable
         # — apply those instead of silently returning a drifted session.
-        from ex_hivent_spark.catalog import ensure_session_confs
-
-        ensure_session_confs(active)
-        active.conf.set("spark.sql.adaptive.enabled", "true")
-        active.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        active.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        active.conf.set(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
-        )
-        active.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "32m"
-        )
+        confs = {**_AQE_CONFS, **_SESSION_CONFS}
         if shuffle_partitions is not None:
-            active.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        for k, v in (extra_conf or {}).items():
+            confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+        for k, v in {**confs, **(extra_conf or {})}.items():
             active.conf.set(k, v)
         return active
 
     cpus = setting("cpus", str(len(os.sched_getaffinity(0))))
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master or setting("master") or f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Coalesce shuffle partitions to the advisory size instead of
-        # preserving max parallelism: measured 33% suite speedup at
-        # sf0.1/local[32] (scheduling overhead dominates 1 MB tasks),
-        # and on a tuned cluster right-sized reducers are best practice
-        # (parallelismFirst=true is Spark's regression-avoidance
-        # default, not its recommendation).
         .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
+            map={
+                **_AQE_CONFS,
+                "spark.sql.shuffle.partitions": str(
+                    shuffle_partitions or _default_shuffle_partitions()
+                ),
+                **_SESSION_CONFS,
+                "spark.ui.enabled": "false",
+                "spark.driver.memory": setting("driver_memory", "8g"),
+                **(extra_conf or {}),
+            }
         )
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32m")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or _default_shuffle_partitions()),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", setting("driver_memory", "8g"))
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()

@@ -56,7 +56,8 @@ def current_version(spark: SparkSession, table_dir: str) -> int | None:
     A crash between the commit's pointer delete and rename leaves only
     ``_VERSION.tmp``. It is written after the snapshot and its manifest,
     so a complete one names a complete snapshot and is rolled forward
-    (the rule ``fsutil.recover_swap`` follows for a ready staging dir)."""
+    (the rule ``fsutil.recover_swap`` follows for a ready staging dir).
+    A roll-forward that leaves no pointer raises ``IOError``."""
     fs, Path = fsutil.hadoop_fs(spark)
     pointer = _pointer_path(table_dir)
     if not fs.exists(Path(pointer)):
@@ -65,7 +66,9 @@ def current_version(spark: SparkSession, table_dir: str) -> int | None:
             return None
         if not fsutil.read_text_file(spark, tmp).strip().isdigit():
             return None  # crashed writing the first pointer: no commit
-        fs.rename(Path(tmp), Path(pointer))
+        # A concurrent reader may have rolled it forward first.
+        if not fs.rename(Path(tmp), Path(pointer)) and not fs.exists(Path(pointer)):
+            raise IOError(f"could not roll {tmp} forward to {pointer}")
     return int(fsutil.read_text_file(spark, pointer).strip())
 
 
@@ -86,6 +89,8 @@ def write_snapshot(
     it. Returns the new version number. The write is all-or-nothing:
     until the pointer rename, readers keep resolving the old snapshot.
     The manifest's row count is observed on the write, not read back.
+    A pointer commit that does not name the new version raises
+    ``IOError``.
     """
     prev = current_version(spark, table_dir)
     version = 0 if prev is None else prev + 1
@@ -107,7 +112,10 @@ def write_snapshot(
     fsutil.write_text_file(spark, f"{pointer}.tmp", str(version))
     fs, Path = fsutil.hadoop_fs(spark)
     fs.delete(Path(pointer), False)
-    fs.rename(Path(f"{pointer}.tmp"), Path(pointer))
+    if not fs.rename(Path(f"{pointer}.tmp"), Path(pointer)):
+        # A concurrent reader may have rolled the pointer forward.
+        if current_version(spark, table_dir) != version:
+            raise IOError(f"could not commit {pointer} to v={version}")
     return version
 
 

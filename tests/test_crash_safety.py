@@ -1,9 +1,12 @@
-"""Crash-safety of the staging-swap publish protocol (fsutil) and its
-users (incremental rollup, two-phase-commit sink).
+"""Crash-safety of the staging-swap publish protocol (fsutil), the
+incremental rollup's fenced replay, and the two-phase-commit sink.
 
 Each test constructs the on-disk state a crash at a specific protocol
 step leaves behind, then asserts recovery restores a consistent view
-with no loss and no double-counting.
+with no loss and no double-counting. The rollup is a streaming view:
+its checkpoint records the files it read, and a batch replayed after a
+crash between publish and commit is fenced by the head snapshot's
+note.
 """
 
 from __future__ import annotations
@@ -13,7 +16,6 @@ import os
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
 from ex_hivent_spark import fsutil
 
@@ -80,66 +82,63 @@ class TestRecoverSwap:
         assert not os.path.exists(f"{target}__old")
 
 
-class TestRollupAtomicMarker:
-    def test_manifest_travels_with_data(self, spark, sf_dir, tmp_path):
-        from ex_hivent_spark.catalog import load_table
-        from ex_hivent_spark.maintenance import (
-            PROCESSED_MANIFEST,
-            refresh_time_rollup,
-        )
+def _rollup_source(spark, sf_dir, tmp_path):
+    """The events table as one parquet file under ``<tmp>/src``."""
+    from ex_hivent_spark.catalog import load_table
 
-        events = load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        )
-        src = str(tmp_path / "src")
-        events.coalesce(1).write.mode("append").parquet(src)
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    src = str(tmp_path / "src")
+    events.coalesce(1).write.mode("append").parquet(src)
+    return src, events.count()
+
+
+def _rollup_rows(spark, rollup):
+    from ex_hivent_spark.sources import versioned
+
+    return sorted(map(repr, versioned.read_snapshot(spark, rollup).collect()))
+
+
+class TestRollupAtomicMarker:
+    def test_progress_survives_a_second_refresh(self, spark, sf_dir, tmp_path):
+        """The rollup's checkpoint records the files it read: a second
+        refresh with no new file folds nothing and publishes nothing."""
+        from ex_hivent_spark.maintenance import refresh_time_rollup
+        from ex_hivent_spark.sources import versioned
+
+        src, n_events = _rollup_source(spark, sf_dir, tmp_path)
         rollup = str(tmp_path / "rollup")
 
-        assert refresh_time_rollup(spark, src, rollup) >= 1
-        manifest = json.loads(
-            fsutil.read_text_file(spark, f"{rollup}/{PROCESSED_MANIFEST}")
-        )
-        assert manifest  # inputs recorded inside the published dir
-        # replay with no new files: nothing re-merged, no double count
+        assert refresh_time_rollup(spark, src, rollup) == n_events
+        head = versioned.current_version(spark, rollup)
         assert refresh_time_rollup(spark, src, rollup) == 0
+        assert versioned.current_version(spark, rollup) == head
 
-    def test_half_swap_replay_does_not_double_count(
+    def test_replayed_batch_does_not_double_count(
         self, spark, sf_dir, tmp_path
     ):
-        """Simulate a crash mid-swap (target moved aside, ready staging
-        not yet promoted): the next refresh must roll forward and still
-        see the manifest, so totals equal a single clean run."""
-        from ex_hivent_spark.catalog import load_table
+        """A crash after a batch's publish but before its commit record:
+        the next refresh replays the batch, finds it fenced at the head,
+        and publishes nothing, so the rollup equals a single clean run."""
         from ex_hivent_spark.maintenance import refresh_time_rollup
+        from ex_hivent_spark.sources import versioned
 
-        events = load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        )
-        src = str(tmp_path / "src")
-        events.coalesce(1).write.mode("append").parquet(src)
+        src, n_events = _rollup_source(spark, sf_dir, tmp_path)
         rollup = str(tmp_path / "rollup")
-        assert refresh_time_rollup(spark, src, rollup) >= 1
-        clean = (
-            spark.read.parquet(rollup)
-            .agg(F.sum("n_events").alias("n"))
-            .collect()[0]["n"]
-        )
+        assert refresh_time_rollup(spark, src, rollup) == n_events
+        clean = _rollup_rows(spark, rollup)
+        head = versioned.current_version(spark, rollup)
 
-        # reconstruct the mid-swap crash state from the published dir
-        staging = fsutil.staging_path(rollup)
-        shutil.copytree(rollup, staging)
-        fsutil.write_text_file(
-            spark, f"{staging}/{fsutil.READY_MARKER}", "ready\n"
-        )
-        shutil.move(rollup, f"{rollup}__old")
+        commits = f"{rollup}/_checkpoint/commits"
+        last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+        os.remove(f"{commits}/{last}")
+        os.remove(f"{commits}/.{last}.crc")
 
         assert refresh_time_rollup(spark, src, rollup) == 0
-        after = (
-            spark.read.parquet(rollup)
-            .agg(F.sum("n_events").alias("n"))
-            .collect()[0]["n"]
-        )
-        assert after == clean
+        assert versioned.current_version(spark, rollup) == head
+        assert _rollup_rows(spark, rollup) == clean
+        assert os.path.exists(f"{commits}/{last}")  # the replay committed
 
 
 class TestSinkAppend:

@@ -82,12 +82,14 @@ def test_zorder_write_shrinks_per_file_ranges(spark, sf_dir, tmp_path):
 
 
 def test_incremental_rollup_equals_full_recompute(spark, sf_dir, tmp_path):
-    """Refreshing in two increments must equal the one-shot aggregation
-    (associative partial merge), and a no-op refresh processes 0 files."""
+    """Refreshing in two increments must equal the one-shot aggregation,
+    each refresh returns the events it folded, and a no-op refresh
+    folds 0."""
     from pyspark.sql import functions as F
 
     from ex_hivent_spark.catalog import load_table
     from ex_hivent_spark.maintenance import refresh_time_rollup
+    from ex_hivent_spark.sources import versioned
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -98,18 +100,17 @@ def test_incremental_rollup_equals_full_recompute(spark, sf_dir, tmp_path):
     )
     first.coalesce(1).write.mode("append").parquet(src)
     rollup = str(tmp_path / "rollup")
-    marker = str(tmp_path / "marker.json")
 
-    assert refresh_time_rollup(spark, src, rollup, marker) >= 1
+    assert refresh_time_rollup(spark, src, rollup) == first.count()
     second.coalesce(1).write.mode("append").parquet(src)
-    assert refresh_time_rollup(spark, src, rollup, marker) >= 1
-    assert refresh_time_rollup(spark, src, rollup, marker) == 0
+    assert refresh_time_rollup(spark, src, rollup) == second.count()
+    assert refresh_time_rollup(spark, src, rollup) == 0
 
     got = (
-        spark.read.parquet(rollup)
+        versioned.read_snapshot(spark, rollup)
         .select(
-            "window_start", "event_type", "n_events",
-            F.col("sum_value_dec").cast("double").alias("sum_value"),
+            "window_start", "event_type", F.col("n_rows").alias("n_events"),
+            F.col("sum_value").cast("double").alias("sum_value"),
         )
     )
     want = events.groupBy(

@@ -217,6 +217,48 @@ def test_versioned_pointer_rolls_forward_after_crash_mid_rename(spark, tmp_path)
     assert V.read_snapshot(spark, t, committed).count() == 2
 
 
+def test_versioned_pointer_rename_failure_raises(spark, tmp_path, monkeypatch):
+    """A pointer rename the filesystem refuses is a failed commit:
+    write_snapshot and the roll-forward in current_version raise
+    instead of reporting the version as committed."""
+    import os
+
+    import pytest
+
+    from ex_hivent_spark import fsutil
+    from ex_hivent_spark.sources import versioned as V
+
+    t = str(tmp_path / "tbl")
+    V.write_snapshot(spark, spark.range(0, 3), t)
+
+    class NoRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            return False
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real = fsutil.hadoop_fs
+
+    def refusing(session):
+        fs, Path = real(session)
+        return NoRename(fs), Path
+
+    monkeypatch.setattr(fsutil, "hadoop_fs", refusing)
+    with pytest.raises(IOError):
+        V.write_snapshot(spark, spark.range(0, 5), t)
+    assert os.path.exists(f"{t}/_VERSION.tmp")
+    with pytest.raises(IOError):
+        V.current_version(spark, t)
+
+    monkeypatch.setattr(fsutil, "hadoop_fs", real)
+    assert V.current_version(spark, t) == 1
+    assert V.read_snapshot(spark, t).count() == 5
+
+
 def test_dynamic_partition_pruning_on_join(spark, sf_dir, tmp_path):
     """Catalyst's dynamic partition pruning must kick in when a
     partitioned fact table is joined against a filtered dim: the fact
