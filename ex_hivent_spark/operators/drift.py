@@ -7,8 +7,7 @@ the Gini revenue-concentration audit, and diurnal percentile bands —
 plus the classical-inference battery (chi-square independence,
 Welch's t, sample-ratio-mismatch, CUPED adjustment) and the
 frequency/rank series diagnostics (periodogram probe, Spearman rho).
-(The streaming twin of PSI lives in streaming/drift.py; the Markov
-behavior-transition matrix in operators/analytics.py.)
+(The Markov behavior-transition matrix lives in operators/analytics.py.)
 
 These are the canonical "did the data change?" checks (feature drift
 before a model retrain, input-distribution regression after an upstream

@@ -879,7 +879,15 @@ def q_ts_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag(ps,21), s2 likewise over value², n = min(row_number−1, 20).
     Decimal arithmetic is exact and order-free, so the difference is
     bit-identical to the frame sum the oracle computes; both window
-    specs share one exchange and one sort (same keys)."""
+    specs share one exchange and one sort (same keys).
+
+    Headroom (types from the plan's schema): the per-row decimal(25,6)
+    cast needs ``value * value`` < 10^19, and the decimal(35,6) running
+    sum needs a user's sum of squares < 10^29. Neither overflows (ANSI
+    raises; non-ANSI reads NULL) while ``|value|`` < 3e9 and a user has
+    < 10^10 rows (sf0.1 peaks: ``|value|`` 561, 99 rows per user).
+    Cross-engine bit-exactness needs 20·value²·10^6 < 2^53 in ``s2``,
+    i.e. ``|value|`` < 2.1e4."""
     e = load_table(spark, sf_dir, "events")
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wrun = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)

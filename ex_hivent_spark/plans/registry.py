@@ -321,9 +321,8 @@ def register(name: str, oracle: Optional[str] = None):
 # hash-verified on registration, wave-anchored (commit b4b22f9), and
 # reference-tested (tests/test_r15_ops.py, 7 passing).
 # (4) Env-gated imports re-probed this round: google.protobuf, PIL,
-# av, soundfile, librosa ALL still absent — transformWithState's e2e
-# test remains skip-gated; the stub-handle equivalence harness stays
-# the committed runtime evidence.
+# av, soundfile, librosa ALL still absent — the PIL-gated multimodal
+# test remains skip-gated.
 # r15 CLOSE evidence (final tree): 508/508 sf0.01 full sweep
 # (CORRECTNESS_LOCAL.json) + vacuous audit 0 zero-row / 0 uncounted;
 # 490/490 sf0.1 full-oracle (CORRECTNESS_SF0_1.json, 18 heavy

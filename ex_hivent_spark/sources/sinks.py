@@ -1,13 +1,13 @@
-"""Sinks: the batch-keyed layout every ``foreachBatch`` writer goes
-through, and the partitioned and bucketed table layouts.
+"""Sinks: the batch-keyed layout route()'s ``foreachBatch`` writes, and
+the partitioned and bucketed table layouts.
 
 Micro-batch ``N`` of a sink lives in ``<sink>/batch_id=N``. The source
 replays a batch after a crash (at-least-once), and the batch-keyed
 replace swaps the replay's own output in instead of appending a second
 copy. A replayable source plus this idempotent sink gives exactly-once
-sink contents, per batch and per sink. ``write_batch`` fills one sink
-with one write; ``write_batches`` fills many sinks from one write,
-staged and then published onto each sink by rename.
+sink contents, per batch and per sink. ``write_batches`` fills many
+sinks from one write, staged and then published onto each sink by
+rename.
 """
 
 from __future__ import annotations
@@ -21,14 +21,6 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from ex_hivent_spark.fsutil import hadoop_fs, write_file
-
-
-def write_batch(df: DataFrame, sink_dir: str, batch_id: int) -> None:
-    """Write micro-batch ``batch_id`` to ``<sink_dir>/batch_id=<N>`` with
-    overwrite, so a replay of the batch overwrites the same directory.
-    Reading ``sink_dir`` yields every batch, with a ``batch_id``
-    partition column."""
-    df.write.mode("overwrite").parquet(f"{sink_dir}/batch_id={batch_id}")
 
 
 def write_batches(
@@ -47,11 +39,12 @@ def write_batches(
     published onto ``<sinks[i]>/batch_id=<N>`` with Hadoop FS calls:
     delete the target, create its parent, rename. A sink with no rows
     gets a schema-only file written on the driver, so every sink holds
-    every batch, as with ``write_batch``. A publish that fails raises,
-    so the batch does not commit; its replay stages and publishes the
-    whole batch again, replacing whatever a crashed attempt left staged
-    or published. The staging directory must be on the sinks'
-    filesystem, where a rename moves a directory."""
+    every batch, and reading a sink yields each batch with a
+    ``batch_id`` partition column. A publish that fails raises, so the
+    batch does not commit; its replay stages and publishes the whole
+    batch again, replacing whatever a crashed attempt left staged or
+    published. The staging directory must be on the sinks' filesystem,
+    where a rename moves a directory."""
     spark = frame.sparkSession
     fs, Path = hadoop_fs(spark)
     fs.delete(Path(staging_dir), True)

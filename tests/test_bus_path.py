@@ -300,6 +300,34 @@ class TestRoute:
         group = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
         assert len(group) == len(batches) * 1
 
+    def test_topic_multiplexer_single_pass(self, spark, tmp_path):
+        """Single-event ``emit()`` calls, routed through subscriptions
+        whose expression is an all-ok null literal: each topic's sink
+        holds exactly its own events."""
+        ingress = str(tmp_path / "in")
+        em = StreamEmitter(spark, ingress, producer="svc")
+        em.emit("topic:a", {"i": 1}, version=1)
+        em.emit("topic:b", {"i": 2}, version=1)
+        em.emit("topic:a", {"i": 3}, version=1)
+
+        sinks = {"topic:a": str(tmp_path / "a"), "topic:b": str(tmp_path / "b")}
+        subs = [
+            Subscription(
+                service="svc",
+                topic=topic,
+                process=F.lit(None).cast("string"),  # every event is ok
+                processed_dir=path,
+                quarantine_dir=f"{path}_quarantine",
+            )
+            for topic, path in sinks.items()
+        ]
+        _drain(route(spark, ingress, subs, str(tmp_path / "cp")))
+
+        a = spark.read.parquet(sinks["topic:a"])
+        b = spark.read.parquet(sinks["topic:b"])
+        assert a.count() == 2 and b.count() == 1
+        assert {r.name for r in a.select("name").distinct().collect()} == {"topic:a"}
+
 
 class TestRouteProgress:
     """What route() reports about each micro-batch: its input rows, the

@@ -1,5 +1,5 @@
-"""Crash-safety of the staging-swap publish protocol (fsutil), the
-incremental rollup's fenced replay, and the two-phase-commit sink.
+"""Crash-safety of the staging-swap publish protocol (fsutil) and the
+incremental rollup's fenced replay.
 
 Each test constructs the on-disk state a crash at a specific protocol
 step leaves behind, then asserts recovery restores a consistent view
@@ -11,7 +11,6 @@ note.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -139,64 +138,6 @@ class TestRollupAtomicMarker:
         assert versioned.current_version(spark, rollup) == head
         assert _rollup_rows(spark, rollup) == clean
         assert os.path.exists(f"{commits}/{last}")  # the replay committed
-
-
-class TestSinkAppend:
-    def test_second_append_preserves_first_commit(self, spark, tmp_path):
-        from ex_hivent_spark.sources.pydatasource import (
-            HiventJsonSinkDataSource,
-        )
-
-        spark.dataSource.register(HiventJsonSinkDataSource)
-        out = str(tmp_path / "sink")
-        os.makedirs(out, exist_ok=True)
-
-        def write(lo, hi):
-            (
-                spark.range(lo, hi)
-                .selectExpr("id AS event_id")
-                .repartition(2)
-                .write.format("hivent_sink")
-                .option("path", out)
-                .mode("append")
-                .save()
-            )
-
-        write(0, 100)
-        write(100, 150)
-
-        rows = []
-        for name in os.listdir(out):
-            if name.endswith(".jsonl"):
-                with open(os.path.join(out, name)) as f:
-                    rows += [json.loads(line) for line in f]
-        assert sorted(r["event_id"] for r in rows) == list(range(150))
-        with open(os.path.join(out, "_MANIFEST")) as f:
-            manifest = json.load(f)
-        assert manifest["n_rows"] == 150
-        assert len(manifest["commits"]) == 2
-
-
-class TestStreamReaderOffsets:
-    def test_latest_offset_never_regresses_after_restart(self):
-        """A fresh reader instance (as after checkpoint recovery) that
-        is shown a committed offset must never report an end offset
-        below it."""
-        from ex_hivent_spark.sources.pydatasource import (
-            HiventEventsStreamReader,
-        )
-
-        r = HiventEventsStreamReader(
-            {"total_rows": "500", "rows_per_batch": "100"}
-        )
-        # Spark replays the last uncommitted batch from the checkpoint:
-        r.partitions({"offset": 200}, {"offset": 300})
-        assert r.latestOffset()["offset"] >= 300
-        r2 = HiventEventsStreamReader(
-            {"total_rows": "500", "rows_per_batch": "100"}
-        )
-        r2.commit({"offset": 400})
-        assert r2.latestOffset()["offset"] >= 400
 
 
 class TestSaltedJoinHow:

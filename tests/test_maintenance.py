@@ -1,4 +1,5 @@
-"""Source-level quarantine (PERMISSIVE JSON) and small-file compaction."""
+"""Table maintenance: small-file compaction, z-order and Hilbert layouts,
+the incremental rollup, key deletes, CDC upserts and table stats."""
 
 from __future__ import annotations
 
@@ -6,27 +7,6 @@ import glob
 import json
 
 from ex_hivent_spark.maintenance import compact_parquet
-from ex_hivent_spark.sources.readers import read_events_json_permissive
-
-
-def test_permissive_json_routes_corrupt_lines(spark, tmp_path):
-    path = str(tmp_path / "in.json")
-    good = {
-        "name": "user:created", "payload": '{"k": 1}', "cid": "c1",
-        "meta": {"version": 1, "cid": "c1", "uuid": "u1",
-                 "key": "k1", "producer": "p",
-                 "created_at": "2024-01-01T00:00:00"},
-    }
-    with open(path, "w") as f:
-        f.write(json.dumps(good) + "\n")
-        f.write('{"name": "broken", INVALID JSON\n')
-        f.write(json.dumps(dict(good, cid="c2")) + "\n")
-
-    ok, quarantined = read_events_json_permissive(spark, path)
-    assert ok.count() == 2
-    bad = quarantined.collect()
-    assert len(bad) == 1
-    assert "INVALID JSON" in bad[0].raw_line
 
 
 def test_compaction_reduces_file_count(spark, sf_dir, tmp_path):

@@ -614,152 +614,6 @@ class TestStreamStreamOuter:
             interval_join(left, right, watermark=None, how="leftOuter")
 
 
-class TestBackfillHandoff:
-    def test_bootstrap_then_tail_equals_full_batch(self, spark, tmp_path):
-        """Kappa catch-up: archive bootstrap (one batch job) + live
-        streaming tail must together equal the full-batch transform —
-        no loss, no double-processing across the handoff; restart with
-        the same checkpoint must not re-run the bootstrap."""
-        from ex_hivent_spark.streaming.backfill import (
-            bootstrap_and_tail,
-            read_derived,
-        )
-
-        archive = str(tmp_path / "archive")
-        live = str(tmp_path / "live")
-        out = str(tmp_path / "derived")
-        ckpt = str(tmp_path / "ckpt")
-        full = spark.range(1000).selectExpr(
-            "id", "id % 13 AS k", "CAST(id * 2 AS DOUBLE) AS v"
-        )
-        full.filter("id < 600").write.parquet(archive)
-        import os
-
-        os.makedirs(live)
-
-        def enrich(df):
-            return df.withColumn("vv", df.v * 10).filter("k <> 5")
-
-        schema = "id LONG, k LONG, v DOUBLE"
-        q = bootstrap_and_tail(
-            spark, archive, live, schema, enrich, out, ckpt
-        )
-        try:
-            # live data arrives after the tail is up
-            full.filter("id >= 600").write.mode("append").parquet(live)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        got = read_derived(spark, out)
-        want = enrich(full)
-        assert got.count() == want.count()
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-
-        # restart: checkpoint exists -> bootstrap skipped, no dupes
-        q2 = bootstrap_and_tail(
-            spark, archive, live, schema, enrich, out, ckpt
-        )
-        try:
-            q2.processAllAvailable()
-        finally:
-            q2.stop()
-        assert read_derived(spark, out).count() == want.count()
-
-
-class TestDimEnrichment:
-    def test_dim_refresh_visible_mid_stream(self, spark, tmp_path):
-        """Per-batch dimension re-read: a dim row updated between
-        micro-batches must enrich the NEXT batch with the new value —
-        the slowly-changing-dimension contract a pinned static join
-        cannot give."""
-        import os
-
-        from ex_hivent_spark.streaming.enrich import dim_enriched_stream
-
-        src = str(tmp_path / "src")
-        dim = str(tmp_path / "dim")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(src)
-        spark.createDataFrame(
-            [(0, "bronze"), (1, "silver")], ["k", "segment"]
-        ).write.parquet(dim)
-
-        # batch 1 data before start (deterministic batch boundaries)
-        spark.createDataFrame(
-            [(100, 0), (101, 1)], ["id", "k"]
-        ).write.mode("append").json(src)
-        q = dim_enriched_stream(
-            spark,
-            spark.readStream.schema("id LONG, k LONG").json(src),
-            dim,
-            "k",
-            out,
-            ckpt,
-        )
-        try:
-            q.processAllAvailable()
-            # dim changes between batches (atomic republish)
-            spark.createDataFrame(
-                [(0, "GOLD"), (1, "silver"), (2, "new")], ["k", "segment"]
-            ).write.mode("overwrite").parquet(dim)
-            spark.createDataFrame(
-                [(200, 0), (201, 2)], ["id", "k"]
-            ).write.mode("append").json(src)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        got = {r.id: r.segment for r in spark.read.parquet(out).collect()}
-        assert got[100] == "bronze"  # batch 1 saw the old dim
-        assert got[200] == "GOLD"    # batch 2 saw the update
-        assert got[201] == "new"     # and the new key
-
-    def test_replayed_batch_does_not_duplicate(self, spark, tmp_path):
-        """A batch replayed after a crash (its commit log entry lost)
-        overwrites its own output instead of appending it again."""
-        import os
-
-        from ex_hivent_spark.streaming.enrich import dim_enriched_stream
-
-        src = str(tmp_path / "src")
-        dim = str(tmp_path / "dim")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(src)
-        spark.createDataFrame([(0, "bronze")], ["k", "segment"]).write.parquet(dim)
-        spark.createDataFrame(
-            [(100, 0), (101, 0)], ["id", "k"]
-        ).write.mode("append").json(src)
-
-        def run():
-            q = dim_enriched_stream(
-                spark,
-                spark.readStream.schema("id LONG, k LONG").json(src),
-                dim,
-                "k",
-                out,
-                ckpt,
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                q.awaitTermination(30)
-
-        run()
-        assert spark.read.parquet(out).count() == 2
-        # crash after the sink write, before the batch's commit: the
-        # restarted query replays batch 0
-        last = max(int(n) for n in os.listdir(f"{ckpt}/commits") if n.isdigit())
-        os.remove(f"{ckpt}/commits/{last}")
-        os.remove(f"{ckpt}/commits/.{last}.crc")
-        run()
-        assert spark.read.parquet(out).count() == 2
-
-
 def test_run_with_restarts_bounded_linear_backoff(monkeypatch):
     """Bounded reconnect (emitter.ex:113-139) with a fake query factory:
     a failed start or a failed run is retried after b, then 2b; after
