@@ -740,9 +740,9 @@ def q_layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     a plain sort gives this on its leading column only.
 
     The bit interleave is a pure integer expression (codegen'd, exact
-    in any engine); the production write path with range partitioning
-    is :func:`ex_hivent_spark.maintenance.zorder_write`, which this
-    query's bucket stats verify the clustering contract of."""
+    in any engine). A z-ordered write would range-partition on the
+    z-value and sort within partitions; this query's bucket stats show
+    the clustering such a write gives."""
     li = load_table(spark, sf_dir, "lineitem")
     zx, zy = F.col("l_partkey"), F.col("l_suppkey")
     terms = []
@@ -1153,7 +1153,7 @@ def _hilbert_ctes_sql(table: str, xcol: str, ycol: str) -> str:
 def with_hilbert_index(df: DataFrame, xcol: str, ycol: str) -> DataFrame:
     """Append a Hilbert-index column ``hd`` for the range-bucketed
     (xcol, ycol): keys scale into the [0, 2^bits) grid from their
-    min/max (one 4-scalar pre-pass, the zorder_write convention), then
+    min/max (one 4-scalar pre-pass), then
     the xy2d recurrence runs over the bit levels — one named projection
     per level, via the SAME per-level expression strings the SQL oracle
     chain uses.
@@ -1221,9 +1221,8 @@ def q_layout_hilbert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same per-level expression strings, so both engines execute the
     identical recurrence. The production write path is
     range-partitioning by hilbert index — same one-shuffle cost as any
-    global sort at 100 TB; the 4-scalar bounds pre-pass is the
-    zorder_write convention (at scale, column statistics provide it
-    for free)."""
+    global sort at 100 TB; at scale, column statistics provide the
+    4-scalar bounds pre-pass for free."""
     # r16 wave 9 NOTE: spread_table was A/B-tested and REVERTED
     # (1.53 plain vs 1.60 spread, 4 -> 6 jobs): the rotation chain is
     # cheap integer codegen, so the added exchange bought nothing.

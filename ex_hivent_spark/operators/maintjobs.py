@@ -4,9 +4,9 @@ COMPACTION/OPTIMIZE planner as a registered query, and a
 space-saving-style bounded top-k summary (the streaming-compatible
 heavy-hitters twin to the exact q_agg_heavy_hitters).
 
-q_maint_compaction_bins — the PLANNING half of maintenance.py's
-``compact_parquet`` executor (which is unit-tested but, being a write
-job, has no oracle-checkable query surface): model a daily-partitioned
+q_maint_compaction_bins — a small-file compaction PLAN as an
+oracle-checkable query (the program has no compaction executor; a
+rewrite job is a write with no query surface): model a daily-partitioned
 streaming sink's micro-batch files (one per (day, event_type) cell of
 the events table, the natural append grain), then pack each day's
 ordered file listing into target-size bins by BYTE OFFSET — a file
@@ -98,7 +98,7 @@ def q_maint_compaction_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     FilePartition/parquet-split model — deterministic, unlike
     first-fit bin-closing, which needs sequential state). Output: the
     per-(day, bin) rewrite manifest — file count, rows, bytes — that
-    maintenance.compact_parquet would execute per bin.
+    a compaction job would execute per bin.
 
     Plan: one partial-aggregated hash aggregate to the day×type file
     grain, a day-partitioned prefix sum over ≤|event_types| rows per

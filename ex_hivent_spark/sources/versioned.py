@@ -1,16 +1,16 @@
 """Snapshot-versioned parquet tables: time travel, atomic commits,
 retention vacuum.
 
-The missing piece next to compaction / MERGE / keyed delete: every
-write lands in an immutable ``v=N`` snapshot directory and a tiny
+Every write lands in an immutable ``v=N`` snapshot directory and a tiny
 ``_VERSION`` pointer file names the current one — the single-file
 analogue of a Delta/Iceberg log head. Readers resolve the pointer once
 and then scan an immutable directory, so a concurrent writer can
 publish ``v=N+1`` without ever disturbing an in-flight ``v=N`` scan
 (snapshot isolation for free), and any historical version stays
-queryable until vacuumed.
+queryable until vacuumed. The streaming views and the hourly rollup
+publish through it; it is the program's one table commit.
 
-Commit protocol (single-writer, HCFS rename semantics like fsutil):
+Commit protocol (single-writer, HCFS rename semantics):
 
 1. fully write ``<table>/v=N`` (plus its ``_SNAPSHOT.json`` manifest)
 2. write ``_VERSION.tmp`` containing ``N``
@@ -55,8 +55,7 @@ def current_version(spark: SparkSession, table_dir: str) -> int | None:
 
     A crash between the commit's pointer delete and rename leaves only
     ``_VERSION.tmp``. It is written after the snapshot and its manifest,
-    so a complete one names a complete snapshot and is rolled forward
-    (the rule ``fsutil.recover_swap`` follows for a ready staging dir).
+    so a complete one names a complete snapshot and is rolled forward.
     A roll-forward that leaves no pointer raises ``IOError``."""
     fs, Path = fsutil.hadoop_fs(spark)
     pointer = _pointer_path(table_dir)
@@ -136,18 +135,20 @@ def read_snapshot(
 
 
 def history(spark: SparkSession, table_dir: str) -> list[dict]:
-    """Manifest of every retained snapshot, newest first."""
+    """Manifest of every retained snapshot, newest first. One listing
+    of the table finds the ``v=N`` directories at or below the head, so
+    the cost follows the retained snapshots, not the head version."""
     head = current_version(spark, table_dir)
+    if head is None:
+        return []
+    fs, Path = fsutil.hadoop_fs(spark)
+    names = [s.getPath().getName() for s in fs.listStatus(Path(table_dir))]
+    versions = [int(n[2:]) for n in names if n.startswith("v=")]
     out: list[dict] = []
-    v = head
-    while v is not None and v >= 0:
+    for v in sorted((v for v in versions if v <= head), reverse=True):
         mpath = f"{_snapshot_dir(table_dir, v)}/{MANIFEST}"
-        if not fsutil.exists(spark, mpath):
-            v -= 1  # vacuumed gap or pre-commit orphan
-            continue
-        m = json.loads(fsutil.read_text_file(spark, mpath))
-        out.append(m)
-        v = v - 1
+        if fsutil.exists(spark, mpath):  # a crashed vacuum leaves none
+            out.append(json.loads(fsutil.read_text_file(spark, mpath)))
     return out
 
 
@@ -173,64 +174,3 @@ def vacuum(
             fs.delete(status.getPath(), True)
             removed.append(v)
     return sorted(removed)
-
-
-def snapshot_diff(
-    spark: SparkSession,
-    table_dir: str,
-    from_version: int,
-    to_version: int,
-    key_col: str,
-    include_old: bool = False,
-) -> DataFrame:
-    """CDC between two snapshots: one row per changed key with
-    ``change ∈ {insert, delete, update}`` — inserts carry the new row's
-    columns, deletes the old row's, updates the new ones. This is the
-    change feed a downstream incremental consumer (or merge_upsert into
-    a derived table) applies instead of reprocessing the full snapshot:
-    at 100 TB the diff of a daily snapshot pair is typically orders of
-    magnitude smaller than the table.
-
-    With ``include_old=True`` each row also carries ``old_<col>``
-    columns (null for inserts) — what a consumer needs to RETRACT the
-    prior contribution of an updated/deleted row, e.g. the incremental
-    materialized-view maintenance in :mod:`ex_hivent_spark.matview`.
-
-    Plan: one full-outer join of the two immutable snapshots on the
-    key; rows equal on every shared column drop out. The join is the
-    unavoidable cost of diffing unordered snapshots — partition both
-    snapshots by the key at write time (write_snapshot accepts any
-    pre-partitioned frame) and it runs exchange-free."""
-    old = read_snapshot(spark, table_dir, from_version)
-    new = read_snapshot(spark, table_dir, to_version)
-    cols = [c for c in new.columns if c != key_col]
-    # Schema evolution: the diff is computed over the NEW snapshot's
-    # schema. A column added since from_version reads as null on the
-    # old side, so rows that gained a value for it classify as updates
-    # — exactly what a downstream consumer must reprocess. Columns
-    # dropped in the new schema fall out of the comparison.
-    new_types = dict(new.dtypes)
-    for c in cols:
-        if c not in old.columns:
-            old = old.withColumn(c, F.lit(None).cast(new_types[c]))
-    o = old.select(
-        F.col(key_col), F.struct(*cols).alias("__old")
-    )
-    n = new.select(
-        F.col(key_col), F.struct(*cols).alias("__new")
-    )
-    j = o.join(n, key_col, "full_outer")
-    change = (
-        F.when(F.col("__old").isNull(), F.lit("insert"))
-        .when(F.col("__new").isNull(), F.lit("delete"))
-        .when(F.col("__old") != F.col("__new"), F.lit("update"))
-    )
-    payload = F.coalesce(F.col("__new"), F.col("__old"))
-    out_cols = [payload[c].alias(c) for c in cols]
-    if include_old:
-        out_cols += [F.col("__old")[c].alias(f"old_{c}") for c in cols]
-    return (
-        j.withColumn("change", change)
-        .filter(F.col("change").isNotNull())
-        .select(key_col, "change", *out_cols)
-    )

@@ -45,10 +45,14 @@ Tables / Materialize-style continuous aggregates).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ex_hivent_spark import fsutil, matview
+from ex_hivent_spark import fsutil
+from ex_hivent_spark.functions.decimals import DEC
 from ex_hivent_spark.sources import versioned
 
 FENCE_PREFIX = "batch:"
@@ -73,6 +77,85 @@ def _has_offsets(spark: SparkSession, checkpoint_dir: str) -> bool:
     return bool(fs.exists(offsets)) and any(
         s.getPath().getName().isdigit() for s in fs.listStatus(offsets)
     )
+
+
+def _null_safe_on(
+    left: DataFrame, right: DataFrame, group_cols: list[str]
+) -> Column:
+    """Null-safe equi-join condition over the group key. A NULL group
+    key is a legal GROUP BY group; plain ``=`` never matches NULL to
+    NULL, so a null-keyed base row and its output row would survive as
+    two separate rows. eqNullSafe matches them (Spark plans it as a
+    hash join on the key, same shuffle shape)."""
+    return reduce(
+        lambda a, b: a & b,
+        [left[c].eqNullSafe(right[c]) for c in group_cols],
+    )
+
+
+def _aggregate(
+    df: DataFrame,
+    group_cols: list[str],
+    sum_cols: list[str],
+    minmax_cols: list[str] = (),
+) -> DataFrame:
+    """Full aggregation of a frame into view-state shape: exact bigint
+    count + decimal sums (``decimal(25,6)``, so the sum does not depend
+    on the order rows arrive in; functions/decimals.py), plus exact
+    min/max per ``minmax_cols`` column."""
+    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")] + [
+        F.sum(F.col(c).cast(DEC)).alias(f"sum_{c}") for c in sum_cols
+    ]
+    for c in minmax_cols:
+        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
+    return df.groupBy(*group_cols).agg(*aggs)
+
+
+def fold_state(
+    state: DataFrame,
+    deltas: DataFrame,
+    group_cols: list[str],
+    sum_cols: list[str],
+    minmax_cols: list[str] = (),
+) -> DataFrame:
+    """Fold a delta frame into a view state. Deltas come in the state's
+    own shape (``n_rows`` + ``sum_<col>`` [+ ``min_/max_<col>``], as
+    :func:`_aggregate` builds it): one full-outer join on the group
+    key, coalesced group-wise addition, zero-count groups dropped. The
+    continuous view, whose state Spark's own aggregation keeps, uses it
+    only to merge a head left by another query into a new query's
+    output.
+
+    Min/max fold monotonically (least/greatest, nulls skipped). That
+    is exact for two aggregates of disjoint append-only streams, the
+    only merge the view makes; it could not undo a retraction."""
+    s, d = state.alias("s"), deltas.alias("d")
+    out_cols = [
+        (
+            F.coalesce(s["n_rows"], F.lit(0))
+            + F.coalesce(d["n_rows"], F.lit(0))
+        ).cast("bigint").alias("n_rows"),
+    ] + [
+        (
+            F.coalesce(s[f"sum_{c}"], F.lit(0).cast(DEC))
+            + F.coalesce(d[f"sum_{c}"], F.lit(0).cast(DEC))
+        ).cast(DEC).alias(f"sum_{c}")
+        for c in sum_cols
+    ]
+    for c in minmax_cols:
+        out_cols += [
+            F.least(s[f"min_{c}"], d[f"min_{c}"]).alias(f"min_{c}"),
+            F.greatest(s[f"max_{c}"], d[f"max_{c}"]).alias(f"max_{c}"),
+        ]
+    key_cols = [
+        F.coalesce(s[c], d[c]).alias(c) for c in group_cols
+    ]  # coalesce is key-identity here: sides only both-match when
+    # eqNullSafe-equal, and a NULL key coalesces from whichever side
+    # is present
+    merged = s.join(d, _null_safe_on(s, d, group_cols), "full_outer").select(
+        *key_cols, *out_cols
+    )
+    return merged.filter(F.col("n_rows") > 0)
 
 
 class SnapshotView:
@@ -133,7 +216,8 @@ class SnapshotView:
 
 class ContinuousAggregateView(SnapshotView):
     """An append-only stream's aggregate view: count, exact decimal sums
-    and min/max per group, in the batch IVM's state shape."""
+    and min/max per group, in the state shape :func:`_aggregate`
+    builds."""
 
     def __init__(
         self,
@@ -149,11 +233,9 @@ class ContinuousAggregateView(SnapshotView):
         self.minmax_cols = list(minmax_cols)
 
     def aggregate(self, df: DataFrame) -> DataFrame:
-        return matview._aggregate(
-            df, self.group_cols, self.sum_cols, self.minmax_cols
-        )
+        return _aggregate(df, self.group_cols, self.sum_cols, self.minmax_cols)
 
     def merge(self, base: DataFrame, output: DataFrame) -> DataFrame:
-        return matview.fold_state(
+        return fold_state(
             base, output, self.group_cols, self.sum_cols, self.minmax_cols
         )

@@ -10,9 +10,11 @@ import os
 
 from pyspark.sql import functions as F
 
-from ex_hivent_spark import matview
 from ex_hivent_spark.sources import versioned
-from ex_hivent_spark.streaming.continuous_view import ContinuousAggregateView
+from ex_hivent_spark.streaming.continuous_view import (
+    ContinuousAggregateView,
+    _aggregate,
+)
 
 SCHEMA = "cat string, val double"
 
@@ -32,7 +34,7 @@ def _write_file(tmp_path, name, rows):
 
 def _expected(spark, tmp_path):
     all_df = spark.read.schema(SCHEMA).json(f"{tmp_path}/src")
-    return matview._aggregate(all_df, ["cat"], ["val"])
+    return _aggregate(all_df, ["cat"], ["val"])
 
 
 def _make(spark, tmp_path):
@@ -149,7 +151,7 @@ def test_streaming_minmax_folds_monotonically(spark, tmp_path):
         _write_file(tmp_path, "b.json", [("x", 9.5), ("x", 0.25)])
         q.processAllAvailable()
         all_df = spark.read.schema(SCHEMA).json(f"{tmp_path}/src")
-        want = _rows(matview._aggregate(all_df, ["cat"], ["val"], ["val"]))
+        want = _rows(_aggregate(all_df, ["cat"], ["val"], ["val"]))
         assert _rows(view.read()) == want
         row = view.read().filter(F.col("cat") == "x").first()
         assert row["min_val"] == 0.25 and row["max_val"] == 9.5
@@ -194,3 +196,40 @@ def test_new_checkpoint_restart_is_not_fenced_out(spark, tmp_path):
     run_chk2()
     assert os.path.exists(f"{tmp_path}/chk2/commits/0")
     assert _rows(view.read()) == before
+
+
+def test_new_checkpoint_merges_null_group_into_one_row(spark, tmp_path):
+    """A NULL group key is a legal GROUP BY group. When a new
+    checkpoint takes over a head that holds one, the merge must match
+    the NULL keys null-safely: the head's NULL row and the new query's
+    NULL row fold into exactly one row, counts and sums added, min/max
+    merged."""
+    os.makedirs(f"{tmp_path}/src", exist_ok=True)
+    os.makedirs(f"{tmp_path}/src2", exist_ok=True)
+    _write_file(tmp_path, "a.json", [(None, 5.0), (None, 1.0), ("x", 2.0)])
+    with open(f"{tmp_path}/src2/b.json", "w") as f:
+        for cat, val in [(None, 9.0), (None, 3.0)]:
+            f.write(json.dumps({"cat": cat, "val": val}) + "\n")
+
+    view = ContinuousAggregateView(
+        spark, f"{tmp_path}/view", ["cat"], ["val"], minmax_cols=["val"]
+    )
+    for src, chk in (("src", "chk1"), ("src2", "chk2")):
+        stream = spark.readStream.schema(SCHEMA).json(f"{tmp_path}/{src}")
+        q = view.start(stream, f"{tmp_path}/{chk}")
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    null_rows = view.read().filter(F.col("cat").isNull()).collect()
+    assert len(null_rows) == 1  # ONE null-group row, not two
+    row = null_rows[0]
+    assert row["n_rows"] == 4
+    assert float(row["sum_val"]) == 18.0
+    assert (row["min_val"], row["max_val"]) == (1.0, 9.0)
+    both = spark.read.schema(SCHEMA).json(
+        [f"{tmp_path}/src", f"{tmp_path}/src2"]
+    )
+    want = _aggregate(both, ["cat"], ["val"], ["val"])
+    assert _rows(view.read()) == _rows(want)

@@ -140,6 +140,52 @@ def test_versioned_table_vacuum_and_orphans(spark, tmp_path):
     assert [h["version"] for h in V.history(spark, t)] == [3, 2]
 
 
+def test_history_probes_do_not_grow_with_the_head(spark, tmp_path, monkeypatch):
+    """history lists the table once and reads only the retained
+    manifests: with two snapshots kept, the filesystem calls it makes
+    at head 11 are as many as at head 1, and the output is the same
+    newest-first manifest list."""
+    from ex_hivent_spark import fsutil
+    from ex_hivent_spark.sources import versioned as V
+
+    t = str(tmp_path / "tbl")
+    real = fsutil.hadoop_fs
+    calls = []
+
+    class Counting:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            calls.append(name)
+            return getattr(self._fs, name)
+
+    def counting(session):
+        fs, Path = real(session)
+        return Counting(fs), Path
+
+    def probes():
+        calls.clear()
+        monkeypatch.setattr(fsutil, "hadoop_fs", counting)
+        try:
+            hist = V.history(spark, t)
+        finally:
+            monkeypatch.setattr(fsutil, "hadoop_fs", real)
+        return hist, len(calls)
+
+    for i in range(12):
+        V.write_snapshot(spark, spark.range(0, i + 1), t, note=f"n{i}")
+        V.vacuum(spark, t, keep_last=2)
+        if i == 1:
+            early, early_probes = probes()
+    late, late_probes = probes()
+    assert [(h["version"], h["note"]) for h in early] == [(1, "n1"), (0, "n0")]
+    assert [(h["version"], h["rows"], h["parent"]) for h in late] == [
+        (11, 12, 10), (10, 11, 9),
+    ]
+    assert late_probes == early_probes
+
+
 def test_versioned_pointer_commit_is_crash_safe(spark, tmp_path):
     """A fully-written but uncommitted snapshot (crash before the
     pointer rename) is invisible to readers: the pointer still resolves
@@ -291,37 +337,6 @@ def test_dynamic_partition_pruning_on_join(spark, sf_dir, tmp_path):
     assert joined.count() == n_purchase
 
 
-def test_snapshot_diff_cdc(spark, tmp_path):
-    """snapshot_diff emits exactly the inserted/deleted/updated keys
-    between two committed versions — the change feed an incremental
-    consumer applies instead of reprocessing the snapshot."""
-    from ex_hivent_spark.sources import versioned as V
-
-    t = str(tmp_path / "cdc_tbl")
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], ["k", "name", "val"]
-    )
-    V.write_snapshot(spark, base, t, note="v0")
-    nxt = spark.createDataFrame(
-        # 1 unchanged, 2 updated, 3 deleted, 4 inserted
-        [(1, "a", 10), (2, "b", 99), (4, "d", 40)], ["k", "name", "val"]
-    )
-    V.write_snapshot(spark, nxt, t, note="v1")
-
-    diff = {
-        r.k: (r.change, r.name, r.val)
-        for r in V.snapshot_diff(spark, t, 0, 1, "k").collect()
-    }
-    assert diff == {
-        2: ("update", "b", 99),
-        3: ("delete", "c", 30),
-        4: ("insert", "d", 40),
-    }
-    # applying the diff via merge semantics reproduces v1 exactly:
-    # unchanged keys never appear in the feed
-    assert 1 not in diff
-
-
 def test_streaming_publishes_versioned_snapshots(spark, tmp_path):
     """Composition: a streaming consumer publishing each micro-batch's
     derived state as a committed snapshot — readers time-travel across
@@ -371,44 +386,3 @@ def test_streaming_publishes_versioned_snapshots(spark, tmp_path):
     first = V.read_snapshot(spark, tbl, version=v_after_first)
     assert sum(r["count"] for r in first.collect()) == 100
     assert V.history(spark, tbl)[0]["version"] == head
-
-
-def test_snapshot_diff_across_schema_evolution(spark, tmp_path):
-    """Adding a column between snapshots must not break the change
-    feed: the diff runs over the NEW schema, the old side reads null
-    for the added column, and rows that gained a value classify as
-    updates (what an incremental consumer must reprocess)."""
-    from pyspark.sql import functions as F
-
-    from ex_hivent_spark.sources import versioned
-
-    tdir = f"{tmp_path}/evolving"
-    v0 = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "id long, s string"
-    )
-    versioned.write_snapshot(spark, v0, tdir)
-    # v1: adds column `extra`, backfilled for id=1 only; id=3 deleted;
-    # id=4 inserted
-    v1 = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", None), (4, "d", None)],
-        "id long, s string, extra int",
-    )
-    versioned.write_snapshot(spark, v1, tdir)
-
-    diff = versioned.snapshot_diff(spark, tdir, 0, 1, "id")
-    by_id = {r["id"]: r for r in diff.collect()}
-    assert by_id[1]["change"] == "update" and by_id[1]["extra"] == 10
-    assert by_id[3]["change"] == "delete"
-    assert by_id[4]["change"] == "insert"
-    # id=2: extra stayed null, s unchanged -> genuinely unchanged...
-    # except the null-vs-null struct compare: nulls are not unequal,
-    # so the row must NOT appear in the feed
-    assert 2 not in by_id
-
-    # include_old carries the retraction payload with the added column
-    # null on the old side
-    diff_old = versioned.snapshot_diff(
-        spark, tdir, 0, 1, "id", include_old=True
-    )
-    row1 = diff_old.filter(F.col("id") == 1).first()
-    assert row1["old_extra"] is None and row1["old_s"] == "a"

@@ -10,9 +10,11 @@ import os
 
 import pytest
 
-from ex_hivent_spark import matview
 from ex_hivent_spark.sources import versioned
-from ex_hivent_spark.streaming.continuous_view import ContinuousAggregateView
+from ex_hivent_spark.streaming.continuous_view import (
+    ContinuousAggregateView,
+    _aggregate,
+)
 
 SCHEMA = "cat string, val double"
 
@@ -102,7 +104,7 @@ def test_history_is_bounded_and_crash_safe(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         versioned.read_snapshot(spark, view_dir, head - 2)
     seen = spark.createDataFrame([r for i in range(5) for r in _batch(i)], SCHEMA)
-    want = _rows(matview._aggregate(seen, ["cat"], ["val"]))
+    want = _rows(_aggregate(seen, ["cat"], ["val"]))
     assert _rows(view.read()) == want
 
     # a replayed batch id is still fenced: no new version, same state
@@ -132,7 +134,7 @@ def test_first_and_later_folds_share_one_path(spark, tmp_path):
             seen += rows
             _add_file(src, i, rows)
             q.processAllAvailable()
-            want = matview._aggregate(
+            want = _aggregate(
                 spark.createDataFrame(seen, SCHEMA), ["cat"], ["val"], ["val"]
             )
             assert _rows(view.read()) == _rows(want)
