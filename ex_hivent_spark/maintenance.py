@@ -32,6 +32,10 @@ def refresh_time_rollup(
     ``rollup_path`` (read it with ``versioned.read_snapshot``). The
     snapshot's note fences the batch, so a replay after a crash
     between publish and commit publishes nothing: no double count.
+    The rollup belongs to its checkpoint: if ``<rollup_path>/_checkpoint``
+    is lost while the rollup has a head, the refresh raises
+    ``ValueError`` instead of folding nothing. Rebuild it at a new
+    ``rollup_path``.
 
     Cost per refresh is O(new files) + O(|rollup|), never O(all
     history). Returns the events folded into a newly published
@@ -39,13 +43,8 @@ def refresh_time_rollup(
     """
     from pyspark.sql import functions as F
 
-    from ex_hivent_spark.sources import versioned
-    from ex_hivent_spark.streaming.continuous_view import (
-        ContinuousAggregateView,
-        _committed_fence,
-    )
+    from ex_hivent_spark.streaming.continuous_view import ContinuousAggregateView
 
-    _, fenced = _committed_fence(versioned.head(spark, rollup_path))
     view = ContinuousAggregateView(
         spark, rollup_path, ["window_start", "event_type"], ["value"]
     )
@@ -62,7 +61,7 @@ def refresh_time_rollup(
     finally:
         query.stop()
     return sum(
-        p["numInputRows"] for p in query.recentProgress if p["batchId"] > fenced
+        p["numInputRows"] for p in query.recentProgress if p["batchId"] > view._fenced
     )
 
 

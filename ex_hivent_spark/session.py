@@ -13,8 +13,6 @@ scale-out behavior:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
 
 from ex_hivent_spark.catalog import _SESSION_CONFS
@@ -33,10 +31,6 @@ _AQE_CONFS = {
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32m",
 }
-
-
-def _default_shuffle_partitions() -> int:
-    return setting_integer("cpus", len(os.sched_getaffinity(0)))
 
 
 def get_session(
@@ -62,16 +56,14 @@ def get_session(
             active.conf.set(k, v)
         return active
 
-    cpus = setting("cpus", str(len(os.sched_getaffinity(0))))
+    cpus = setting_integer("cpus")
     return (
         SparkSession.builder.appName(app_name)
         .master(master or setting("master") or f"local[{cpus}]")
         .config(
             map={
                 **_AQE_CONFS,
-                "spark.sql.shuffle.partitions": str(
-                    shuffle_partitions or _default_shuffle_partitions()
-                ),
+                "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
                 **_SESSION_CONFS,
                 "spark.ui.enabled": "false",
                 "spark.driver.memory": setting("driver_memory", "8g"),

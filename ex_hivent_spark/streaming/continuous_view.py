@@ -15,21 +15,21 @@ runs one Spark job, and min/max are Spark's own exact aggregates.
 Exactly-once: each snapshot's manifest records the (query identity,
 batch id) pair as ``batch:N@<checkpoint_dir>``, and the pointer rename
 commits data and fence atomically. A checkpoint replay of a batch
-whose publish already committed finds its own pair at the head and
+whose publish already committed is at or below that fence and
 publishes nothing. It still runs the frame, into the ``noop`` sink:
 Spark fails a batch whose state stores did not all commit. Skipping
 the publish is sound because a fenced batch's state version was
-committed when its publish ran. The identity half of the fence
-matters because batch ids are per-checkpoint: a NEW checkpoint
-restarts them at 0, and must not be fenced out by the old ones.
+committed when its publish ran.
 
-A new checkpoint over a head another query published starts from an
-empty state store. ``start()`` then copies that head once to
-``<checkpoint_dir>/base`` and every publish of the query returns
-``merge(base, output)``. The base lives with the checkpoint, so it
-survives vacuum and restarts. One query maintains a view at a time:
-an older checkpoint resumed after another query published publishes
-its own state, without the other query's rows.
+One view, one checkpoint: a view belongs to the checkpoint that
+published its first snapshot, as a Structured Streaming query is
+named by its checkpoint and recovered from its offset and commit logs
+alone. ``start()`` reads the head once. It refuses (``ValueError``) a
+head fenced by another checkpoint or by a note no view wrote, and a
+head of this checkpoint when the checkpoint has planned no batch (it
+was lost: its batch ids would restart at 0 under the old fence). It
+keeps the fenced batch id, so a publish reads no head. To rebuild a
+view, start a new checkpoint on a new ``view_dir``.
 
 Scale shape: per batch, one partial-aggregating shuffle of the batch
 into the state store and one write of the |groups|-sized aggregate.
@@ -45,9 +45,7 @@ Tables / Materialize-style continuous aggregates).
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -79,20 +77,6 @@ def _has_offsets(spark: SparkSession, checkpoint_dir: str) -> bool:
     )
 
 
-def _null_safe_on(
-    left: DataFrame, right: DataFrame, group_cols: list[str]
-) -> Column:
-    """Null-safe equi-join condition over the group key. A NULL group
-    key is a legal GROUP BY group; plain ``=`` never matches NULL to
-    NULL, so a null-keyed base row and its output row would survive as
-    two separate rows. eqNullSafe matches them (Spark plans it as a
-    hash join on the key, same shuffle shape)."""
-    return reduce(
-        lambda a, b: a & b,
-        [left[c].eqNullSafe(right[c]) for c in group_cols],
-    )
-
-
 def _aggregate(
     df: DataFrame,
     group_cols: list[str],
@@ -111,81 +95,28 @@ def _aggregate(
     return df.groupBy(*group_cols).agg(*aggs)
 
 
-def fold_state(
-    state: DataFrame,
-    deltas: DataFrame,
-    group_cols: list[str],
-    sum_cols: list[str],
-    minmax_cols: list[str] = (),
-) -> DataFrame:
-    """Fold a delta frame into a view state. Deltas come in the state's
-    own shape (``n_rows`` + ``sum_<col>`` [+ ``min_/max_<col>``], as
-    :func:`_aggregate` builds it): one full-outer join on the group
-    key, coalesced group-wise addition, zero-count groups dropped. The
-    continuous view, whose state Spark's own aggregation keeps, uses it
-    only to merge a head left by another query into a new query's
-    output.
-
-    Min/max fold monotonically (least/greatest, nulls skipped). That
-    is exact for two aggregates of disjoint append-only streams, the
-    only merge the view makes; it could not undo a retraction."""
-    s, d = state.alias("s"), deltas.alias("d")
-    out_cols = [
-        (
-            F.coalesce(s["n_rows"], F.lit(0))
-            + F.coalesce(d["n_rows"], F.lit(0))
-        ).cast("bigint").alias("n_rows"),
-    ] + [
-        (
-            F.coalesce(s[f"sum_{c}"], F.lit(0).cast(DEC))
-            + F.coalesce(d[f"sum_{c}"], F.lit(0).cast(DEC))
-        ).cast(DEC).alias(f"sum_{c}")
-        for c in sum_cols
-    ]
-    for c in minmax_cols:
-        out_cols += [
-            F.least(s[f"min_{c}"], d[f"min_{c}"]).alias(f"min_{c}"),
-            F.greatest(s[f"max_{c}"], d[f"max_{c}"]).alias(f"max_{c}"),
-        ]
-    key_cols = [
-        F.coalesce(s[c], d[c]).alias(c) for c in group_cols
-    ]  # coalesce is key-identity here: sides only both-match when
-    # eqNullSafe-equal, and a NULL key coalesces from whichever side
-    # is present
-    merged = s.join(d, _null_safe_on(s, d, group_cols), "full_outer").select(
-        *key_cols, *out_cols
-    )
-    return merged.filter(F.col("n_rows") > 0)
-
-
 class SnapshotView:
     """A view maintained by Spark's streaming aggregation in complete
-    mode. Subclasses supply ``aggregate(df)``, the view over a frame,
-    and ``merge(base, output)``, the view over two such views."""
+    mode, owned by one checkpoint. Subclasses supply ``aggregate(df)``,
+    the view over a frame."""
 
     def __init__(self, spark: SparkSession, view_dir: str):
         self.spark = spark
         self.view_dir = view_dir
-        # Query identity half of the fence, and the foreign head to
-        # merge into each publish; both set by start().
+        # The fence of the running query, set by start(): its
+        # checkpoint and the last batch id the head holds.
         self._txn_id: str | None = None
-        self._base: DataFrame | None = None
+        self._fenced = -1
 
     def aggregate(self, df: DataFrame) -> DataFrame:
         raise NotImplementedError
 
-    def merge(self, base: DataFrame, output: DataFrame) -> DataFrame:
-        raise NotImplementedError
-
     def _publish(self, output: DataFrame, batch_id: int) -> None:
-        txn, fenced = _committed_fence(versioned.head(self.spark, self.view_dir))
-        if txn == self._txn_id and batch_id <= fenced:
+        if batch_id <= self._fenced:
             # A replay of a published batch: run it only so that its
             # state stores commit.
             output.write.format("noop").mode("overwrite").save()
             return
-        if self._base is not None:
-            output = self.merge(self._base, output)
         versioned.write_snapshot(
             self.spark, output, self.view_dir,
             note=f"{FENCE_PREFIX}{batch_id}@{self._txn_id}",
@@ -193,15 +124,20 @@ class SnapshotView:
         versioned.vacuum(self.spark, self.view_dir, keep_last=KEEP_VERSIONS)
 
     def start(self, stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        spark, base = self.spark, f"{checkpoint_dir}/base"
-        if not _has_offsets(spark, checkpoint_dir):
-            head = versioned.head(spark, self.view_dir)
-            if head is not None and _committed_fence(head)[0] != checkpoint_dir:
-                versioned.read_snapshot(spark, self.view_dir).write.mode(
-                    "overwrite"
-                ).parquet(base)
-        self._txn_id = checkpoint_dir
-        self._base = spark.read.parquet(base) if fsutil.exists(spark, base) else None
+        """Start the query; raise ``ValueError`` if the view has a head
+        this checkpoint cannot resume (see the module docstring)."""
+        head = versioned.head(self.spark, self.view_dir)
+        owner, fenced = _committed_fence(head)
+        if head is not None and (
+            owner != checkpoint_dir or not _has_offsets(self.spark, checkpoint_dir)
+        ):
+            raise ValueError(
+                f"view {self.view_dir} belongs to checkpoint {owner} "
+                f"(head note {head['note']!r}); checkpoint {checkpoint_dir} "
+                "cannot resume it: only the checkpoint that published a "
+                "view, with its offsets, publishes to it"
+            )
+        self._txn_id, self._fenced = checkpoint_dir, fenced
         return (
             self.aggregate(stream).writeStream.outputMode("complete")
             .foreachBatch(self._publish)
@@ -234,8 +170,3 @@ class ContinuousAggregateView(SnapshotView):
 
     def aggregate(self, df: DataFrame) -> DataFrame:
         return _aggregate(df, self.group_cols, self.sum_cols, self.minmax_cols)
-
-    def merge(self, base: DataFrame, output: DataFrame) -> DataFrame:
-        return fold_state(
-            base, output, self.group_cols, self.sum_cols, self.minmax_cols
-        )

@@ -10,9 +10,9 @@ view's next snapshot. ``read()`` resolves the snapshot pointer.
 
 Scale notes: the publish writes O(|keys|) rows per batch, the honest
 cost of parquet-as-serving-table; the reduce itself is one max(struct)
-hash aggregate — no window sort, map-side partials. A new checkpoint
-over an existing view merges by the same reduce, over the union of
-that view's head and each batch's output.
+hash aggregate — no window sort, map-side partials. The view belongs
+to the checkpoint that published it first: ``start()`` with another
+checkpoint, or with a lost one, raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -54,5 +54,3 @@ class UpsertView(SnapshotView):
     def aggregate(self, df: DataFrame) -> DataFrame:
         return latest_per_key(df, self.key, self.ts_col, self.cols)
 
-    def merge(self, base: DataFrame, output: DataFrame) -> DataFrame:
-        return self.aggregate(base.unionByName(output))

@@ -1,13 +1,16 @@
 """Streaming continuous aggregate views: every micro-batch publish must
 land on exactly the batch-aggregate of all data seen so far (bit-equal
 decimal sums), survive restarts from the checkpoint without double
-counting, and skip replayed batch ids (exactly-once fencing)."""
+counting, skip replayed batch ids (exactly-once fencing), and refuse
+a checkpoint that did not publish the view or lost its offsets."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from ex_hivent_spark.sources import versioned
@@ -159,77 +162,45 @@ def test_streaming_minmax_folds_monotonically(spark, tmp_path):
         q.stop()
 
 
-def test_new_checkpoint_restart_is_not_fenced_out(spark, tmp_path):
-    """Restarting the stream with a NEW checkpoint directory resets
-    batch ids to 0. A bare batch-id fence would silently drop every
-    restarted batch whose id is <= the old fence (data loss); the
-    (query identity, batch id) pair fence must fold them instead."""
+def test_second_checkpoint_is_refused(spark, tmp_path):
+    """A view belongs to the checkpoint that published it. A second
+    checkpoint over its head raises before it runs a batch: the head
+    keeps its version and rows, and nothing is copied under the new
+    checkpoint."""
     view, stream = _make(spark, tmp_path)
     _write_file(tmp_path, "a.json", [("x", 1.0)])
-    _write_file(tmp_path, "b.json", [("x", 2.0)])
     q = view.start(stream, f"{tmp_path}/chk1")
     q.processAllAvailable()
     q.stop()
-    committed = versioned.current_version(spark, f"{tmp_path}/view")
-    assert committed is not None  # fence is now at some batch id >= 0
-
-    # new source file, NEW checkpoint -> batch ids restart from 0
-    os.makedirs(f"{tmp_path}/src2", exist_ok=True)
-    with open(f"{tmp_path}/src2/c.json", "w") as f:
-        f.write(json.dumps({"cat": "y", "val": 7.5}) + "\n")
-
-    def run_chk2():
-        stream2 = spark.readStream.schema(SCHEMA).json(f"{tmp_path}/src2")
-        q2 = view.start(stream2, f"{tmp_path}/chk2")
-        q2.processAllAvailable()
-        q2.stop()
-
-    run_chk2()
-    state = view.read()
-    assert state.filter(F.col("cat") == "y").count() == 1  # not dropped
-    got_sum = state.agg(F.sum("n_rows")).first()[0]
-    assert got_sum == 3  # 2 from the first query + 1 from the restart
-
-    # and a true replay under the SAME identity still fences
+    head = versioned.current_version(spark, view.view_dir)
     before = _rows(view.read())
-    _uncommit(f"{tmp_path}/chk2", 0)  # chk2 already committed batch 0
-    run_chk2()
-    assert os.path.exists(f"{tmp_path}/chk2/commits/0")
+
+    view2, stream2 = _make(spark, tmp_path)
+    with pytest.raises(ValueError) as err:
+        view2.start(stream2, f"{tmp_path}/chk2")
+    for name in (view.view_dir, f"{tmp_path}/chk1", f"{tmp_path}/chk2"):
+        assert name in str(err.value)
+    assert versioned.current_version(spark, view.view_dir) == head
     assert _rows(view.read()) == before
+    assert not os.path.exists(f"{tmp_path}/chk2/base")
 
 
-def test_new_checkpoint_merges_null_group_into_one_row(spark, tmp_path):
-    """A NULL group key is a legal GROUP BY group. When a new
-    checkpoint takes over a head that holds one, the merge must match
-    the NULL keys null-safely: the head's NULL row and the new query's
-    NULL row fold into exactly one row, counts and sums added, min/max
-    merged."""
-    os.makedirs(f"{tmp_path}/src", exist_ok=True)
-    os.makedirs(f"{tmp_path}/src2", exist_ok=True)
-    _write_file(tmp_path, "a.json", [(None, 5.0), (None, 1.0), ("x", 2.0)])
-    with open(f"{tmp_path}/src2/b.json", "w") as f:
-        for cat, val in [(None, 9.0), (None, 3.0)]:
-            f.write(json.dumps({"cat": cat, "val": val}) + "\n")
+def test_lost_checkpoint_restart_is_refused(spark, tmp_path):
+    """A checkpoint deleted and restarted at the same path restarts its
+    batch ids at 0, under the head's fence of the lost run. Its batches
+    would be fenced out and their rows lost, so the start raises."""
+    view, stream = _make(spark, tmp_path)
+    chk = f"{tmp_path}/chk"
+    _write_file(tmp_path, "a.json", [("x", 1.0)])
+    _write_file(tmp_path, "b.json", [("x", 1.0)])
+    q = view.start(stream, chk)
+    q.processAllAvailable()
+    q.stop()
+    before = _rows(view.read())
 
-    view = ContinuousAggregateView(
-        spark, f"{tmp_path}/view", ["cat"], ["val"], minmax_cols=["val"]
-    )
-    for src, chk in (("src", "chk1"), ("src2", "chk2")):
-        stream = spark.readStream.schema(SCHEMA).json(f"{tmp_path}/{src}")
-        q = view.start(stream, f"{tmp_path}/{chk}")
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    null_rows = view.read().filter(F.col("cat").isNull()).collect()
-    assert len(null_rows) == 1  # ONE null-group row, not two
-    row = null_rows[0]
-    assert row["n_rows"] == 4
-    assert float(row["sum_val"]) == 18.0
-    assert (row["min_val"], row["max_val"]) == (1.0, 9.0)
-    both = spark.read.schema(SCHEMA).json(
-        [f"{tmp_path}/src", f"{tmp_path}/src2"]
-    )
-    want = _aggregate(both, ["cat"], ["val"], ["val"])
-    assert _rows(view.read()) == _rows(want)
+    shutil.rmtree(chk)
+    _write_file(tmp_path, "c.json", [("y", 2.0)])
+    view2, stream2 = _make(spark, tmp_path)
+    with pytest.raises(ValueError, match="cannot resume"):
+        view2.start(stream2, chk)
+    assert _rows(view.read()) == before

@@ -4,7 +4,8 @@ The rollup is a streaming view: its checkpoint records the files it
 read, and a batch replayed after a crash between publish and commit is
 fenced by the head snapshot's note. Each test builds the on-disk state
 such a crash leaves behind, then asserts the next refresh lands on the
-state of one clean run, with no loss and no double-counting.
+state of one clean run, with no loss and no double-counting; a lost
+checkpoint is refused.
 ``TestSaltedJoinHow`` pins ``salted_join``'s refusal of the join types
 whose salted form would not be exact.
 """
@@ -12,6 +13,7 @@ whose salted form would not be exact.
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -73,6 +75,25 @@ class TestRollupAtomicMarker:
         assert versioned.current_version(spark, rollup) == head
         assert _rollup_rows(spark, rollup) == clean
         assert os.path.exists(f"{commits}/{last}")  # the replay committed
+
+    def test_lost_checkpoint_raises(self, spark, sf_dir, tmp_path):
+        """A rollup whose checkpoint is lost cannot resume: its restarted
+        batch ids fall under the head's fence, so the refresh raises
+        instead of folding nothing and returning 0."""
+        from ex_hivent_spark.maintenance import refresh_time_rollup
+        from ex_hivent_spark.sources import versioned
+
+        src, n_events = _rollup_source(spark, sf_dir, tmp_path)
+        rollup = str(tmp_path / "rollup")
+        assert refresh_time_rollup(spark, src, rollup) == n_events
+        clean = _rollup_rows(spark, rollup)
+        head = versioned.current_version(spark, rollup)
+
+        shutil.rmtree(f"{rollup}/_checkpoint")
+        with pytest.raises(ValueError, match="_checkpoint"):
+            refresh_time_rollup(spark, src, rollup)
+        assert versioned.current_version(spark, rollup) == head
+        assert _rollup_rows(spark, rollup) == clean
 
 
 class TestSaltedJoinHow:

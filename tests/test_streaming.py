@@ -445,38 +445,26 @@ class TestUpsertView:
             q.stop()
         return view
 
-    def test_new_checkpoint_keeps_latest_rows_of_both_sources(
-        self, spark, tmp_path
-    ):
-        """A second query with a new checkpoint over a new source starts
-        from an empty state store; the view must still hold the latest
-        row per key across both sources."""
-        from ex_hivent_spark.streaming.upsert import latest_per_key
+    def test_second_checkpoint_is_refused(self, spark, tmp_path):
+        """The upsert view belongs to the checkpoint that published it:
+        a second checkpoint over its head raises and leaves the head as
+        it was."""
+        import os
 
-        first, second = str(tmp_path / "ev1"), str(tmp_path / "ev2")
-        _write_events(spark, first, [
-            (1, "2024-01-01 10:00:00", 1, "click", 1.0),
-            (2, "2024-01-01 11:00:00", 2, "click", 2.0),
-            (3, "2024-01-01 09:00:00", 4, "view", 3.0),
-        ])
-        _write_events(spark, second, [
-            (4, "2024-01-01 10:30:00", 2, "view", 4.0),  # older: loses
-            (5, "2024-01-01 12:00:00", 3, "buy", 5.0),
-            (6, "2024-01-01 13:00:00", 4, "buy", 6.0),  # newer: wins
-        ])
-        view_dir = str(tmp_path / "view")
-        self._drain(spark, first, view_dir, str(tmp_path / "cp1"))
-        view = self._drain(spark, second, view_dir, str(tmp_path / "cp2"))
+        from ex_hivent_spark.sources import versioned
 
-        both = spark.read.parquet(first).unionByName(spark.read.parquet(second))
-        want = latest_per_key(
-            both, "user_id", "ts", ["event_id", "event_type", "value"]
-        )
-        got = view.read().select(*want.columns)
-        assert sorted(map(repr, got.collect())) == sorted(
-            map(repr, want.collect())
-        )
-        assert sorted(r.event_id for r in got.collect()) == [1, 2, 5, 6]
+        src, view_dir = str(tmp_path / "ev"), str(tmp_path / "view")
+        _write_events(spark, src, [(1, "2024-01-01 10:00:00", 1, "click", 1.0)])
+        view = self._drain(spark, src, view_dir, str(tmp_path / "cp1"))
+        head = versioned.current_version(spark, view_dir)
+        before = sorted(map(repr, view.read().collect()))
+
+        _write_events(spark, src, [(2, "2024-01-01 11:00:00", 1, "buy", 2.0)])
+        with pytest.raises(ValueError, match="cannot resume"):
+            self._drain(spark, src, view_dir, str(tmp_path / "cp2"))
+        assert versioned.current_version(spark, view_dir) == head
+        assert sorted(map(repr, view.read().collect())) == before
+        assert not os.path.exists(tmp_path / "cp2" / "base")
 
     def test_replayed_batch_changes_nothing(self, spark, tmp_path):
         """A checkpoint replay of the last published batch (its commit

@@ -81,6 +81,26 @@ def test_steady_fold_runs_one_job(spark, tmp_path):
     assert versioned.current_version(spark, view.view_dir) == 1
 
 
+def test_drain_reads_the_head_once(spark, tmp_path, monkeypatch):
+    """start() reads the head once and keeps its fence: the publishes
+    of a three-batch drain read no head."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(3):
+        _add_file(src, i, _batch(i))
+    reads, head = [], versioned.head
+
+    def counted_head(*args):
+        reads.append(args)
+        return head(*args)
+
+    monkeypatch.setattr(versioned, "head", counted_head)
+    view = ContinuousAggregateView(spark, str(tmp_path / "view"), ["cat"], ["val"])
+    _drain(view, spark, src, tmp_path / "chk")
+    assert versioned.current_version(spark, view.view_dir) == 2
+    assert len(reads) == 1
+
+
 def test_history_is_bounded_and_crash_safe(spark, tmp_path):
     src, chk = tmp_path / "src", tmp_path / "chk"
     src.mkdir()
