@@ -9,6 +9,8 @@ scale-out behavior:
   table stores TIMESTAMP(NANOS), which Spark's vectorized reader rejects;
   the catalog layer converts the raw nanos back to a timestamp column.
 - Arrow enabled for any pandas interchange (LLM ops use vectorized paths).
+- Spark's FileSystem-based checkpoint manager for every streaming query
+  (``_STREAMING_CONFS``; docs/SCALE.md, Streaming).
 """
 
 from __future__ import annotations
@@ -32,6 +34,25 @@ _AQE_CONFS = {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32m",
 }
 
+# A streaming query reads these from its Hadoop conf when it starts, for
+# its offset, commit and source logs and its state store. Spark's
+# default checkpoint manager renames through FileContext, which forks
+# ``readlink`` per rename on a local FS without Hadoop's native library;
+# the FileSystem-based one renames with ``FileSystem.rename``. Both
+# create a checkpoint file atomically (docs/SCALE.md, Streaming).
+_STREAMING_CONFS = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
+}
+
+
+def ensure_streaming_confs(spark: SparkSession) -> None:
+    """Apply the streaming confs to any session, before a query starts."""
+    for key, value in _STREAMING_CONFS.items():
+        spark.conf.set(key, value)
+
 
 def get_session(
     app_name: str = "ex-hivent-spark",
@@ -49,7 +70,7 @@ def get_session(
         # Static confs (master, driver memory) cannot change on a live
         # session, but every conf correctness depends on is runtime-settable
         # — apply those instead of silently returning a drifted session.
-        confs = {**_AQE_CONFS, **_SESSION_CONFS}
+        confs = {**_AQE_CONFS, **_SESSION_CONFS, **_STREAMING_CONFS}
         if shuffle_partitions is not None:
             confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
         for k, v in {**confs, **(extra_conf or {})}.items():
@@ -65,6 +86,7 @@ def get_session(
                 **_AQE_CONFS,
                 "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
                 **_SESSION_CONFS,
+                **_STREAMING_CONFS,
                 "spark.ui.enabled": "false",
                 "spark.driver.memory": setting("driver_memory", "8g"),
                 **(extra_conf or {}),

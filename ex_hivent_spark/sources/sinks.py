@@ -48,7 +48,10 @@ def write_batches(
     spark = frame.sparkSession
     fs, Path = hadoop_fs(spark)
     fs.delete(Path(staging_dir), True)
-    frame.write.partitionBy(sink_col).parquet(staging_dir)
+    # No _SUCCESS marker: the renames below publish the batch.
+    frame.write.partitionBy(sink_col).option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    ).parquet(staging_dir)
     schema = None
     for i, sink in enumerate(sinks):
         staged = f"{staging_dir}/{sink_col}={i}"

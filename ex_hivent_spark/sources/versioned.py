@@ -96,7 +96,10 @@ def write_snapshot(
     snap = _snapshot_dir(table_dir, version)
     written = Observation()
     df = df.observe(written, F.count(F.lit(1)).alias("rows"))
-    df.write.mode("overwrite").parquet(snap)
+    # No _SUCCESS marker: the pointer rename commits the snapshot.
+    df.write.mode("overwrite").option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    ).parquet(snap)
     n_rows = written.get["rows"]
     fsutil.write_text_file(
         spark,

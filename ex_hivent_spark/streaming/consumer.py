@@ -26,6 +26,10 @@ Reference lifecycle (lib/hivent/consumer.ex):
   (SURVEY.md §3.2).
 - restart: bounded reconnect attempts with linearly growing backoff
   (consumer.ex:110-127, emitter.ex:113-139) → ``run_with_restarts``.
+- checkpoint I/O: per micro-batch the query writes an offset, a commit
+  and a source-log file under its checkpoint, through Spark's
+  FileSystem-based checkpoint manager, which route() sets on the
+  session it is given (``session.ensure_streaming_confs``).
 
 Processing supports two callback shapes:
 - an *expression* (Column → error-message-or-null): the fast path, stays
@@ -50,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ex_hivent_spark.envelope import DEFAULT_PARTITION_COUNT, INGRESS_SCHEMA
+from ex_hivent_spark.session import ensure_streaming_confs
 from ex_hivent_spark.sources.sinks import write_batches
 
 # route()'s trigger interval. With the default trigger an idle query
@@ -231,6 +236,7 @@ def route(
     def write(batch: DataFrame, batch_id: int) -> None:
         write_batches(batch, sinks, _SUB, staging_dir, batch_id)
 
+    ensure_streaming_confs(spark)
     events = (
         spark.readStream.schema(INGRESS_SCHEMA)
         .option("maxFilesPerTrigger", 1)

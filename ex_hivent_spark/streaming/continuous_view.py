@@ -35,7 +35,12 @@ Scale shape: per batch, one partial-aggregating shuffle of the batch
 into the state store and one write of the |groups|-sized aggregate.
 The base stream is never re-read. State is bounded by the key
 cardinality, view history by ``KEEP_VERSIONS``, and the state store's
-history by ``spark.sql.streaming.minBatchesToRetain``.
+history by ``spark.sql.streaming.minBatchesToRetain``. Checkpoint I/O
+per batch: an offset and a commit file, and per state partition a
+delta and its checksum file, all written through Spark's
+FileSystem-based checkpoint manager, which ``start()`` sets on the
+session (``session.ensure_streaming_confs``). The snapshot write
+leaves no ``_SUCCESS`` marker: the pointer rename is its commit.
 
 Reference parity note: the reference (an Elixir event-transport
 client, SURVEY.md §0) consumes streams but materializes nothing; this
@@ -51,6 +56,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ex_hivent_spark import fsutil
 from ex_hivent_spark.functions.decimals import DEC
+from ex_hivent_spark.session import ensure_streaming_confs
 from ex_hivent_spark.sources import versioned
 
 FENCE_PREFIX = "batch:"
@@ -138,6 +144,7 @@ class SnapshotView:
                 "view, with its offsets, publishes to it"
             )
         self._txn_id, self._fenced = checkpoint_dir, fenced
+        ensure_streaming_confs(self.spark)
         return (
             self.aggregate(stream).writeStream.outputMode("complete")
             .foreachBatch(self._publish)

@@ -3,7 +3,8 @@ what each step stores and which Spark jobs it runs: one ingress file per
 emit and no Spark job, an ack equal to the stored rows, Python callables
 that see only their own topic, route() jobs attributed to the query's
 job group, what route() reports per batch, the columns each published
-sink holds, and a stop() that ends a slow batch.
+sink holds, the checkpoint manager route() and a view write through,
+and a stop() that ends a slow batch.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ex_hivent_spark.streaming.consumer import INGRESS_SCHEMA, Subscription, route
+from ex_hivent_spark.streaming.continuous_view import ContinuousAggregateView
 from ex_hivent_spark.streaming.emitter import StreamEmitter
 
 
@@ -501,6 +503,57 @@ class TestPublish:
         for sink, vs in want.items():
             assert _payload_vs(spark.read.parquet(str(tmp_path / sink))) == vs, sink
         assert not (chk / "staging").exists() or not os.listdir(chk / "staging")
+
+
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _route_and_view(spark, tmp_path):
+    """A drained route() query and a drained view over the same two
+    emits, each started on a session without the checkpoint manager
+    conf, as a driver's own session would be."""
+    ingress = str(tmp_path / "ingress")
+    em = StreamEmitter(spark, ingress, producer="svc")
+    em.emit_batch(_events("topic:a", 8, bad_every=4))
+    em.emit_batch(_events("topic:a", 5, 40))
+    spark.conf.unset(CHECKPOINT_MANAGER)
+    routed = route(spark, ingress, _expression_subs(tmp_path, "a"), str(tmp_path / "chk"))
+    _drain(routed)
+    spark.conf.unset(CHECKPOINT_MANAGER)
+    view = ContinuousAggregateView(spark, str(tmp_path / "view"), ["name"], ["partition_id"])
+    viewed = view.start(
+        spark.readStream.schema(INGRESS_SCHEMA).parquet(ingress), str(tmp_path / "view_chk")
+    )
+    _drain(viewed)
+    return routed, viewed
+
+
+class TestCheckpoint:
+    """How route() and a view write their checkpoints, and what a
+    publish leaves beside the data."""
+
+    def test_route_and_view_log_through_the_filesystem_manager(self, spark, tmp_path):
+        for q in _route_and_view(spark, tmp_path):
+            execution = q._jsq.streamingQuery()
+            managers = {
+                log.fileManager().getClass().getName()
+                for log in (execution.offsetLog(), execution.commitLog())
+            }
+            assert managers == {FS_MANAGER}
+
+    def test_published_directories_hold_no_success_marker(self, spark, tmp_path):
+        """The rename that publishes a directory is its commit, so the
+        write behind it leaves no ``_SUCCESS``."""
+        _route_and_view(spark, tmp_path)
+        published = glob.glob(str(tmp_path / "a_*" / "batch_id=*"))
+        versions = glob.glob(str(tmp_path / "view" / "v=*"))
+        assert len(published) == 4 and versions
+        for d in published + versions:
+            assert not [n for n in os.listdir(d) if "_SUCCESS" in n], d
 
 
 def _slow_process(log_dir: str, flag: str):
